@@ -30,10 +30,7 @@ from pandamapreduce_spark.plans import REGISTRY
 
 # Driver-verification window management: the driver's CORRECTNESS pass
 # covers the first N (~50) entries of ``queries()`` in iteration order.
-# Round-7 change (VERDICT r6 #3): the priority is COMPUTED from the
-# CORRECTNESS_r*.json ledger instead of hand-maintained prose — the r5
-# crowd-out and the r6 hand-rotation were both failures of maintaining
-# ledger data by hand. Order:
+# The priority is computed from the CORRECTNESS_r*.json ledger. Order:
 #   1. never driver-green (new lanes, or landed past a window),
 #   2. changed this round (the hand OVERRIDE below — the one fact the
 #      ledger cannot know),
@@ -41,79 +38,14 @@ from pandamapreduce_spark.plans import REGISTRY
 # Entries beyond the window stay covered by tests/test_oracle_parity.py
 # at sf0.001 and each session's full-registry emulation at sf0.01.
 
-#: Queries whose Spark plan or oracle changed this round — the only
-#: hand-maintained piece. Round 9: EMPTY. The two refactors that
-#: touched existing lanes are hash-verified pure: q204's loop moved
-#: into the shared `_bpe_learn`/`_bpe_words` helpers with its oracle
-#: text proven byte-identical to the pre-refactor string and its
-#: execution path unchanged (need_final=False reproduces the old loop
-#: exactly; re-MATCHed at sf0.001/0.01 on landing), and q198's
-#: percentile tail moved into `sla_histogram_report` with identical
-#: ops and an unchanged oracle (re-MATCHed at sf0.001/0.01 on
-#: landing). Windowing either would crowd out the r4/r5-stale
-#: rotation (VERDICT r8 #3); both stay covered by pytest + the
-#: full-registry emulation. q206/q207 take the window's head as
-#: never-green. Late round 9, same class (hash-verified pure, kept
-#: out of the window for the same reason): q198's histogram front
-#: half moved into the shared `ship_delay_histogram` (identical ops,
-#: oracle unchanged, re-MATCHed at sf0.01 in a targeted emulation AND
-#: the post-change 209/209 full sweep), and every streaming lane's
-#: source staging moved to `streaming/staging.py::stage_stream_dir`
-#: (plan-identical — only the symlink bookkeeping changed; q60/q61/
-#: q198/q205/q207 re-MATCHed targeted, full registry re-swept green).
-#: Final round-9 change that DOES take window rows (the q185-in-r8
-#: precedent — ORACLE TEXT changed): the q166/q183/q203 oracles'
-#: ranked all-pairs window is now query-sharded into a UNION ALL of
-#: 16 disjoint `vec_id % 16` branches (value-identical by
-#: construction — ranks are per-query and the per-pair cosine
-#: expression is unchanged; proven identical old-vs-new in DuckDB at
-#: sf0.001/0.01 for all three and at sf0.1 for q166) so the oracle
-#: streams instead of materializing 4e8 pairs — this closes the
-#: documented q166/q183/q203 sf1 oracle exclusions (SF1_PARITY.md).
-#: q136's oracle got the same treatment (wedge join sharded by hub,
-#: e/deg/oe MATERIALIZED; identical results at sf0.01/sf0.1, 17-26x
-#: faster, and in-budget at sf1 where the monolithic form spilled).
-#: q83 is the round's one REAL cross-engine bug, caught by the new
-#: full-registry sf1 sweep: the RANGE frame keyed Spark-side on
-#: truncated seconds (unix_timestamp) vs DuckDB's fractional epoch —
-#: the engines disagreed on same-user events < 1 s apart, a regime no
-#: driver fixture reaches. Both sides now key on exact integer epoch
-#: MICROSECONDS; re-MATCHed at sf0.001/0.01/0.1/sf1.
-#: Round 10: q87's semantic side swapped from the label self-join
-#: (the r9 verdict's one scale-weak: 1548 s at sf1) to q35's blocked
-#: cogroup grid — a real default-plan swap, windowed (re-MATCHed at
-#: sf0.001/0.01/0.1 on landing). q35 is windowed for its kernel-guard
-#: alignment ((na>0)&(nb>0), ADVICE r9 — bitwise-identical on the
-#: fixtures, pinned by pytest) riding the same kernel. The round's
-#: OTHER change is hash-verified pure and stays out of the window
-#: (the r9 refactor precedent): every SELF-cogroup's right side now
-#: goes through lineage.detach (a no-op identity projection that
-#: breaks attribute sharing) after the round found Spark 4.1 pruning
-#: the right side's payload columns under count()-shaped downstream
-#: plans — no ledger/oracle path triggers it (they collect), q35/q87/
-#: q166/q183/q203/q43/q43b/q45 all re-MATCHed targeted at sf0.001/
-#: 0.01 (+0.1 for the embedding lanes); tests/test_round10.py pins
-#: the count() trigger.
-#: Round 10's big ORACLE TEXT change (q185-in-r8 precedent — all take
-#: window rows): the MinHash signature CTE shared by the md5-recompute
-#: oracle class is now the distinct-shingle join-back form
-#: (`plans/dedup.py::minhash_sigs_sql`) — md5 once per DISTINCT
-#: shingle instead of 2×12 per occurrence. Value-identical by
-#: construction (min is duplicate-invariant; the h1+i*h2 family is
-#: unchanged) and PROVEN: sigs CTE row-identical old-vs-new at
-#: sf0.001/0.01/0.1, full q32 oracle row-identical at sf0.1 (25.9×
-#: faster: 168.1 s → 6.5 s), and all 12 affected lanes re-MATCHed vs
-#: the new oracles at sf0.001/0.01. This closes the documented sf1
-#: OVER_BUDGET oracle class (sf1 sigs: ~53 s vs ~40 min).
-#: Round 11 window (changed plan ⇒ window row — the r10-VERDICT
-#: contract): the r10 basket-pair reshape consumers the driver never
-#: re-hashed post-change (q131/q136/q184/q187 — only q169 was
-#: in-window), plus every lane whose PLAN changed in r11 — q171's
-#: shared-corpus persist (and the five ANN lanes it composes keep
-#: their standalone plans), the label-prop connected-components
-#: per-round reshape (q94/q103/q172/q183/q203/q106), q129's persisted
-#: edge frame, and q187's broadcast-hint one-shot plan.
+#: Queries whose Spark plan or oracle text changed since their last
+#: driver-green row — the only hand-maintained piece. A changed plan
+#: takes a window row; a refactor proven plan-identical does not.
 _WINDOW_OVERRIDE: list[str] = [
+    "q90_sequence_packing",
+    "q96_vocab_build",
+    "q141_pps_sample",
+    "q208_bpe_pack",
     "q131_copurchase",
     "q136_triangle_count",
     "q184_communities",

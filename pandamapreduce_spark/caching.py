@@ -2,8 +2,9 @@
 
 A few plans persist a shuffled intermediate because the SAME pid
 assignment must be seen by both a bounded driver collect and the
-returned DataFrame (the distributed-prefix-sum pattern in q90/q96) or
-by an iterative loop (q94). A bare ``.persist()`` leaks: the returned
+returned DataFrame (``operators/prefix.py::range_prefix``, which q90,
+q96 and the other distributed-prefix lanes go through) or by an
+iterative loop (q94). A bare ``.persist()`` leaks: the returned
 DataFrame is lazy, so there is no in-plan point where the cache can be
 dropped, and Spark never auto-unpersists.
 

@@ -14,11 +14,13 @@ is a SINGLE-PARTITION sort — one task sees every row. Instead:
    one-row-per-range base offsets back (flat plan — VERDICT r7
    retired the chained 64-deep ``F.when`` form).
 
-Shared by q100 (deciles), q163 (quantile normalize), q177 (RFM
-ntiles), q189 (ABC cumulative revenue), q202 (Gini ranks). The
-reference has no global-order operator — its sorts end at the
-per-reducer level (``src/panda/PandaMapReduceJob.cpp:885-955``); this
-is the scale-out generalization Spark needs for exact global ranks.
+Shared by q90 (sequence packing), q96 (vocab ids), q100 (deciles),
+q141 (PPS sampling), q163 (quantile normalize), q177 (RFM ntiles),
+q189 (ABC cumulative revenue), q202 (Gini ranks) and q208 (BPE
+packing). The reference has no global-order operator — its sorts end
+at the per-reducer level (``src/panda/PandaMapReduceJob.cpp:885-955``);
+this is the scale-out generalization Spark needs for exact global
+ranks.
 """
 
 from __future__ import annotations
@@ -30,9 +32,10 @@ from pyspark.sql import functions as F
 
 from pandamapreduce_spark.caching import scoped_persist
 
-#: default range partitions for the global exchange; on a real cluster
-#: this is sized to executors x cores (a deployment knob, not plan
-#: shape — results are invariant to the boundaries, pytest-pinned).
+#: range partitions for the global exchange, read at call time by every
+#: prefix lane; on a real cluster this is sized to executors x cores (a
+#: deployment knob, not plan shape — results are invariant to the
+#: boundaries, pytest-pinned).
 PREFIX_RANGES = 64
 
 
@@ -41,7 +44,6 @@ def range_prefix(
     order_cols: Sequence[str],
     *,
     sum_col: str | None = None,
-    ranges: int = PREFIX_RANGES,
 ) -> tuple[DataFrame, int, int | None]:
     """Annotate ``df`` with exact global prefix offsets.
 
@@ -62,7 +64,7 @@ def range_prefix(
     partitioning (released at the next dispatch, per caching.py).
     """
     parts = scoped_persist(
-        df.repartitionByRange(ranges, *order_cols).withColumn(
+        df.repartitionByRange(PREFIX_RANGES, *order_cols).withColumn(
             "_pid", F.spark_partition_id()
         )
     )

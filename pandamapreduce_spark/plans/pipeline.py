@@ -23,7 +23,7 @@ from pandamapreduce_spark.functions import (
     word_ngrams,
     word_ngrams_sql,
 )
-from pandamapreduce_spark.operators.prefix import PREFIX_RANGES, range_prefix
+from pandamapreduce_spark.operators.prefix import range_prefix
 from pandamapreduce_spark.plans.dedup import MAX_BUCKET, _lsh_pairs_sql
 from pandamapreduce_spark.plans.numeric import davg, davg_sql
 from pandamapreduce_spark.plans.registry import query
@@ -240,12 +240,6 @@ def q86_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- global quality deciles (distributed exact rank) ----------------------
 
-# Range partitions for the global-rank exchange — ONE knob: the
-# operator's own default, aliased here so retuning PREFIX_RANGES
-# retunes every prefix lane (a second 64 here went stale-prone).
-RANK_RANGES = PREFIX_RANGES
-
-
 @query(
     "q100_global_quality_deciles",
     oracle=f"""
@@ -282,7 +276,7 @@ def q100_global_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile, so the oracle hash-matches.
 
     Scale: one range exchange of (score, id, tokens) triples, fully
-    parallel per-range sorts (spill-capable), ~RANK_RANGES rows to
+    parallel per-range sorts (spill-capable), ~PREFIX_RANGES rows to
     the driver. Result invariant to the range boundaries.
     """
     from pyspark.sql import Window
@@ -297,7 +291,7 @@ def q100_global_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1.0),
         ).alias("alpha_ratio"),
     )
-    parts, total, _ = range_prefix(scored, ["alpha_ratio", "doc_id"], ranges=RANK_RANGES)
+    parts, total, _ = range_prefix(scored, ["alpha_ratio", "doc_id"])
     tq, tr = total // 10, total % 10
     w = Window.partitionBy("_pid").orderBy("alpha_ratio", "doc_id")
     rk = (F.row_number().over(w).cast("bigint") + F.col("_base")).alias("rk")
@@ -998,7 +992,7 @@ def q163_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one pinned int/int division; total order (n_chars, doc_id) is
     deterministic under ties. Scale shape: the global order statistic
     relation comes from ONE range exchange + per-range row_number +
-    a RANK_RANGES-row driver prefix (q100's machinery — never a
+    a PREFIX_RANGES-row driver prefix (q100's machinery — never a
     single-partition window); the per-source rank is a per-source
     window (spill-capable); the final mapping is an integer equi-join
     of N rows against the N-row order-statistic relation. r·N stays
@@ -1007,7 +1001,7 @@ def q163_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    parts, total, _ = range_prefix(docs, ["n_chars", "doc_id"], ranges=RANK_RANGES)
+    parts, total, _ = range_prefix(docs, ["n_chars", "doc_id"])
     wg = Window.partitionBy("_pid").orderBy("n_chars", "doc_id")
     glob = parts.select(
         (F.row_number().over(wg).cast("bigint") + F.col("_base")).alias("grk"),
@@ -1050,7 +1044,7 @@ def _global_ntile(df: DataFrame, value_col: str, id_col: str, k: int, out: str) 
     arithmetic on (rank, total) — bitwise DuckDB ntile semantics."""
     from pyspark.sql import Window
 
-    parts, total, _ = range_prefix(df, [value_col, id_col], ranges=RANK_RANGES)
+    parts, total, _ = range_prefix(df, [value_col, id_col])
     tq, tr = total // k, total % k
     w = Window.partitionBy("_pid").orderBy(value_col, id_col)
     rk = (F.row_number().over(w).cast("bigint") + F.col("_base")).alias("_rk")
@@ -1195,9 +1189,7 @@ def q189_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("neg", -F.col("cents"))
     )
-    parts, _, total = range_prefix(
-        rev, ["neg", "l_partkey"], sum_col="cents", ranges=RANK_RANGES
-    )
+    parts, _, total = range_prefix(rev, ["neg", "l_partkey"], sum_col="cents")
     from pyspark.sql import Window
 
     w = (
@@ -1485,7 +1477,7 @@ def q202_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    parts, _, _ = range_prefix(rev, ["cents", "l_partkey"], ranges=RANK_RANGES)
+    parts, _, _ = range_prefix(rev, ["cents", "l_partkey"])
     from pyspark.sql import Window
 
     w = Window.partitionBy("_pid").orderBy("cents", "l_partkey")

@@ -20,12 +20,36 @@ from pyspark.sql import functions as F
 from pandamapreduce_spark.caching import release_one, scoped_checkpoint, scoped_persist
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.functions import hex16, tokens, tokens_sql
+from pandamapreduce_spark.operators.prefix import range_prefix
 from pandamapreduce_spark.plans.registry import REGISTRY, query
 
 # --- q90: sequence packing (concat-and-chunk) -----------------------------
 
 PACK_TOKENS = 512
-PACK_RANGES = 16  # prefix-sum range partitions; at scale ≥ input splits
+
+
+def _pack_spans(t: DataFrame) -> DataFrame:
+    """``(doc_id, n_tokens)`` -> each doc's exact global token offset
+    (exclusive prefix sum in doc_id order, via ``range_prefix``) and
+    the span of PACK_TOKENS-token packs it lands in. Shared by q90 and
+    q208."""
+    parts, _, _ = range_prefix(t, ["doc_id"], sum_col="n_tokens")
+    w = Window.partitionBy("_pid").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        parts.select(
+            "doc_id",
+            "n_tokens",
+            (F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) + F.col("_base_sum"))
+            .cast("bigint")
+            .alias("start_offset"),
+        )
+        .withColumn("pack_first", F.expr(f"start_offset div {PACK_TOKENS}"))
+        .withColumn(
+            "pack_last", F.expr(f"(start_offset + greatest(n_tokens, 1) - 1) div {PACK_TOKENS}")
+        )
+        .withColumn("n_packs", F.col("pack_last") - F.col("pack_first") + F.lit(1).cast("bigint"))
+        .orderBy("doc_id")
+    )
 
 
 @query(
@@ -57,40 +81,15 @@ def q90_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack range it lands in.
 
     Scale shape — the global running sum is a DISTRIBUTED prefix sum,
-    not a single-partition window: range-partition by doc_id, ship one
-    (partition, token-sum) row per partition to the driver (bounded:
-    one row per range), prefix the sums there, and add each
-    partition's base offset to a per-partition cumulative window
-    (parallel across ranges). The result is invariant to the range
-    boundaries, so AQE/cluster-size changes don't move any offset.
+    not a single-partition window: the shared ``range_prefix``
+    range-partitions by doc_id, collects one (range, token-sum) row
+    per range to the driver, and broadcast-joins each range's base
+    offset back onto a per-range cumulative window (parallel across
+    ranges). The result is invariant to the range boundaries, so
+    AQE/cluster-size changes don't move any offset.
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", F.size(tokens("text")).cast("bigint").alias("n_tokens"))
-    # scoped: the SAME pid assignment must be seen by the bounded
-    # collect below and the returned plan; released at next dispatch
-    parts = scoped_persist(t.repartitionByRange(PACK_RANGES, "doc_id").withColumn("pid", F.spark_partition_id()))
-    # Bounded collect: one (pid, sum, min_doc) row per range partition.
-    per = sorted(
-        parts.groupBy("pid").agg(F.sum("n_tokens").alias("s"), F.min("doc_id").alias("lo")).collect(),
-        key=lambda r: r["lo"],
-    )
-    base = F.lit(0).cast("bigint")
-    acc = 0
-    for r in per:
-        base = F.when(F.col("pid") == r["pid"], F.lit(acc).cast("bigint")).otherwise(base)
-        acc += r["s"]
-    w = Window.partitionBy("pid").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
-    return (
-        parts.select(
-            "doc_id",
-            "n_tokens",
-            (F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) + base).alias("start_offset"),
-        )
-        .withColumn("pack_first", F.expr(f"start_offset div {PACK_TOKENS}"))
-        .withColumn("pack_last", F.expr(f"(start_offset + greatest(n_tokens, 1) - 1) div {PACK_TOKENS}"))
-        .withColumn("n_packs", F.col("pack_last") - F.col("pack_first") + F.lit(1).cast("bigint"))
-        .orderBy("doc_id")
-    )
+    return _pack_spans(docs.select("doc_id", F.size(tokens("text")).cast("bigint").alias("n_tokens")))
 
 
 # --- q91: source mixture rebalancing --------------------------------------
@@ -719,7 +718,6 @@ def q94_dedup_clusters(
 # --- q96: vocabulary build (distributed rank → token ids) -----------------
 
 VOCAB_MIN_COUNT = 5
-VOCAB_RANGES = 16  # rank-range partitions; at scale ≥ input splits
 
 
 @query(
@@ -747,11 +745,11 @@ def q96_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the global rank is NOT a single-partition window —
     that would serialize a 10^8-term vocab through one task. Instead
-    the counted terms are range-partitioned on the rank key
-    (cnt desc, token), each range assigns local row_numbers in
-    parallel, and the per-range base offsets come from one bounded
-    driver collect (one row per range — the q90 distributed-prefix-sum
-    pattern). Result is invariant to the range boundaries.
+    the shared ``range_prefix`` range-partitions the counted terms on
+    the ascending rank key (-cnt, token) (q189's negation), each range
+    assigns local row_numbers in parallel, and the per-range base
+    offsets are broadcast-joined back from one bounded driver collect
+    (one row per range). Result is invariant to the range boundaries.
     """
     docs = load_table(spark, sf_dir, "documents", spread=True)
     c = (
@@ -759,32 +757,15 @@ def q96_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .where(F.col("cnt") >= VOCAB_MIN_COUNT)
+        .withColumn("neg", -F.col("cnt"))
     )
-    # scoped: pid consistency between collect and plan, as in q90
-    parts = scoped_persist(
-        c.repartitionByRange(VOCAB_RANGES, F.col("cnt").desc(), F.col("token").asc())
-        .withColumn("pid", F.spark_partition_id())
-    )
-    # Bounded collect: (pid, n_terms, rank-key of the range's head row).
-    # The head key must be the min of the FULL rank key (-cnt, token) —
-    # min(cnt) and min(token) separately mis-order ranges that split
-    # inside one cnt value.
-    head = F.min(F.struct((-F.col("cnt")).alias("neg_cnt"), F.col("token").alias("tok"))).alias("head")
-    per = sorted(
-        parts.groupBy("pid").agg(F.count(F.lit(1)).alias("n"), head).collect(),
-        key=lambda r: (r["head"]["neg_cnt"], r["head"]["tok"]),
-    )
-    base = F.lit(0).cast("bigint")
-    acc = 0
-    for r in per:
-        base = F.when(F.col("pid") == r["pid"], F.lit(acc).cast("bigint")).otherwise(base)
-        acc += r["n"]
-    w = Window.partitionBy("pid").orderBy(F.col("cnt").desc(), F.col("token").asc())
+    parts, _, _ = range_prefix(c, ["neg", "token"])
+    w = Window.partitionBy("_pid").orderBy("neg", "token")
     return (
         parts.select(
             "token",
             "cnt",
-            (F.row_number().over(w).cast("bigint") - 1 + base).alias("token_id"),
+            (F.row_number().over(w).cast("bigint") - 1 + F.col("_base")).alias("token_id"),
         )
         .orderBy("token_id")
     )
@@ -1197,7 +1178,6 @@ def q123_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- q141: systematic PPS document sampling -------------------------------
 
 PPS_K = 100  # sample size (grid points over the cumulative token axis)
-PPS_RANGES = 8  # range partitions for the distributed prefix sum
 
 
 @query(
@@ -1220,7 +1200,7 @@ PPS_RANGES = 8  # range partitions for the distributed prefix sum
     SELECT doc_id, n AS n_tokens, cast(mult as bigint) AS multiplicity
     FROM m WHERE mult >= 1 ORDER BY doc_id
     """,
-    doc=f"Systematic probability-proportional-to-size sampling: {PPS_K} evenly-spaced grid points over the cumulative token axis select documents with multiplicity = #grid points inside their token interval — fully deterministic (no RNG, no transcendental), exact integer arithmetic, inclusion probability ∝ token count, Σ multiplicity = {PPS_K} by construction; distributed prefix sum (q90's machinery).",
+    doc=f"Systematic probability-proportional-to-size sampling: {PPS_K} evenly-spaced grid points over the cumulative token axis select documents with multiplicity = #grid points inside their token interval — fully deterministic (no RNG, no transcendental), exact integer arithmetic, inclusion probability ∝ token count, Σ multiplicity = {PPS_K} by construction; distributed prefix sum (the shared `range_prefix`).",
     tags=("sampling", "pps", "prefix-sum"),
 )
 def q141_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1230,34 +1210,21 @@ def q141_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     which are irreproducible across engines and need a transcendental.
     Systematic PPS replaces the RNG with a deterministic grid: lay all
     T tokens on one axis (exclusive prefix sum of token counts in
-    doc_id order — q90's range-partition + bounded-driver-offsets
-    machinery, no single-partition window), drop K grid points at
-    positions floor(j·T/K), and a document is sampled once per grid
-    point inside its interval: multiplicity =
-    ceil((s+n)·K/T) − ceil(s·K/T), pure bigint arithmetic. Any doc
-    with n ≥ T/K is guaranteed in (its interval must contain a grid
-    point); Σ multiplicity = K exactly. Only (doc_id, n) pairs
-    shuffle."""
+    doc_id order — the shared ``range_prefix``, no single-partition
+    window), drop K grid points at positions floor(j·T/K), and a
+    document is sampled once per grid point inside its interval:
+    multiplicity = ceil((s+n)·K/T) − ceil(s·K/T), pure bigint
+    arithmetic. Any doc with n ≥ T/K is guaranteed in (its interval
+    must contain a grid point); Σ multiplicity = K exactly. Only
+    (doc_id, n) pairs shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.size(tokens("text")).cast("bigint").alias("n"))
-    parts = scoped_persist(
-        tok.repartitionByRange(PPS_RANGES, "doc_id").withColumn("pid", F.spark_partition_id())
-    )
-    per = sorted(
-        parts.groupBy("pid").agg(F.sum("n").alias("s"), F.min("doc_id").alias("lo")).collect(),
-        key=lambda r: r["lo"],
-    )
-    base = F.lit(0).cast("bigint")
-    acc = 0
-    for r in per:
-        base = F.when(F.col("pid") == r["pid"], F.lit(acc).cast("bigint")).otherwise(base)
-        acc += r["s"]
-    total = acc
-    w = Window.partitionBy("pid").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
+    parts, _, total = range_prefix(tok, ["doc_id"], sum_col="n")
+    w = Window.partitionBy("_pid").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
     c = parts.select(
         "doc_id",
         "n",
-        (F.coalesce(F.sum("n").over(w), F.lit(0)) + base).alias("s"),
+        (F.coalesce(F.sum("n").over(w), F.lit(0)) + F.col("_base_sum")).alias("s"),
     )
     mult = F.expr(f"((s + n) * {PPS_K} + {total} - 1) div {total}") - F.expr(
         f"(s * {PPS_K} + {total} - 1) div {total}"
@@ -2186,17 +2153,15 @@ def q208_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window, not a when-chain).
 
     Scale shape: everything before the prefix is q206's audited plan;
-    the prefix adds one range exchange + a {PACK_RANGES}-row driver
-    collect + a broadcast join; pack arithmetic is map-only integer
-    div. Offsets are invariant to range boundaries (range_prefix
-    contract, pytest-pinned there), so cluster-size changes move no
-    pack assignment.
+    the prefix (``_pack_spans``, shared with q90) adds one range
+    exchange + a PREFIX_RANGES-row driver collect + a broadcast join;
+    pack arithmetic is map-only integer div. Offsets are invariant to
+    range boundaries (range_prefix contract, pytest-pinned there), so
+    cluster-size changes move no pack assignment.
 
     Exactness: all columns are exact bigints; the oracle reproduces
     the SAME chained-CTE learn/encode chain plus a window-based prefix
     — parity proves the distributed prefix rewrite."""
-    from pandamapreduce_spark.operators.prefix import range_prefix
-
     docs = load_table(spark, sf_dir, "documents", spread=True)
     _, final = _bpe_learn(_bpe_words(docs), need_final=True)
     per = (
@@ -2210,20 +2175,4 @@ def q208_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(per, "doc_id", "left")
         .select("doc_id", F.coalesce("n_tokens", F.lit(0)).cast("bigint").alias("n_tokens"))
     )
-    parts, _, _ = range_prefix(t, ["doc_id"], sum_col="n_tokens", ranges=PACK_RANGES)
-    w = Window.partitionBy("_pid").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
-    return (
-        parts.select(
-            "doc_id",
-            "n_tokens",
-            (F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) + F.col("_base_sum"))
-            .cast("bigint")
-            .alias("start_offset"),
-        )
-        .withColumn("pack_first", F.expr(f"start_offset div {PACK_TOKENS}"))
-        .withColumn(
-            "pack_last", F.expr(f"(start_offset + greatest(n_tokens, 1) - 1) div {PACK_TOKENS}")
-        )
-        .withColumn("n_packs", F.col("pack_last") - F.col("pack_first") + F.lit(1).cast("bigint"))
-        .orderBy("doc_id")
-    )
+    return _pack_spans(t)

@@ -5,14 +5,15 @@ Usage: driver_emulation.py [SF_DIR] [name1,name2,...]
 The optional second arg restricts the run to a comma-separated query
 subset (e.g. the bench set for the gated sf1 parity pass)."""
 
-import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 from pandamapreduce_spark.session import get_spark  # noqa: E402
+from tests.test_oracle_parity import canon  # noqa: E402
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
@@ -27,22 +28,6 @@ con = duckdb.connect()
 con.execute("SET memory_limit='24GB'")
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-
-
-def canon(df, places=6):
-    df = df[sorted(df.columns)]
-    out = []
-    for tup in df.itertuples(index=False):
-        row = []
-        for v in tup:
-            if isinstance(v, float):
-                row.append("NaN" if math.isnan(v) else f"{round(v, places):.{places}f}")
-            elif isinstance(v, (list, tuple)) or str(type(v)).endswith("ndarray'>"):
-                row.append(str(list(v)))
-            else:
-                row.append(str(v))
-        out.append(tuple(row))
-    return sorted(out)
 
 
 qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import os
 import sys
 import threading
@@ -30,9 +29,10 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 from pandamapreduce_spark.session import get_spark  # noqa: E402
+from tests.test_oracle_parity import canon  # noqa: E402
 
 #: Lanes whose sf1 run is excluded by FIXTURE SEMANTICS, not cost:
 #: the FK-copy fixture replicates every document 10x byte-identically,
@@ -56,22 +56,6 @@ SEMANTIC_EXCLUSIONS = {"q147_set_similarity_join"}
 #: Their behavior at scale is covered by the error-bound pytests
 #: (tests/test_sketches.py) and q59's determinism/monotonicity tests.
 REGIME_EXCLUSIONS = {"q59_gmm_em", "q64_sketch_distinct_rollup", "q66_approx_quantiles"}
-
-
-def canon(df, places=6):
-    df = df[sorted(df.columns)]
-    out = []
-    for tup in df.itertuples(index=False):
-        row = []
-        for v in tup:
-            if isinstance(v, float):
-                row.append("NaN" if math.isnan(v) else f"{round(v, places):.{places}f}")
-            elif isinstance(v, (list, tuple)) or str(type(v)).endswith("ndarray'>"):
-                row.append(str(list(v)))
-            else:
-                row.append(str(v))
-        out.append(tuple(row))
-    return sorted(out)
 
 
 def run_oracle(sf_dir: str, sql: str, budget: float):

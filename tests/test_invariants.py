@@ -13,9 +13,10 @@ strategy generalized:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from pandamapreduce_spark.operators import tera
+from pandamapreduce_spark.operators import prefix, tera
 from pandamapreduce_spark.operators.mapreduce import map_reduce
 
 from tests.conftest import SF_DIR
@@ -227,21 +228,30 @@ def test_lcg_affine_matches_skip():
             assert (a_n * x0 + c_n) % _M == lcg_skip(n, x0)
 
 
-def test_sequence_packing_invariant_to_range_count(spark):
-    """q90's distributed prefix sum must produce offsets identical to
-    a single-range (serial) computation — the result cannot depend on
-    how many range partitions the cluster happens to use."""
-    from pandamapreduce_spark.plans import training
-    from tests.conftest import SF_DIR
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q90_sequence_packing",
+        "q96_vocab_build",
+        "q100_global_quality_deciles",
+        "q141_pps_sample",
+    ],
+)
+def test_prefix_lane_invariant_to_range_count(spark, monkeypatch, name):
+    """A ``range_prefix`` lane's global offsets/ranks must not depend
+    on how many range partitions the cluster uses: one range (the
+    serial computation) and three ranges collect exactly the rows of
+    the default count."""
+    from pandamapreduce_spark.plans import REGISTRY
 
-    base = training.q90_sequence_packing(spark, SF_DIR).collect()
-    old = training.PACK_RANGES
-    try:
-        training.PACK_RANGES = 1
-        serial = training.q90_sequence_packing(spark, SF_DIR).collect()
-    finally:
-        training.PACK_RANGES = old
-    assert base == serial
+    def rows():
+        return REGISTRY[name].build(spark, SF_DIR).collect()
+
+    base = rows()
+    assert base
+    for n_ranges in (1, 3):
+        monkeypatch.setattr(prefix, "PREFIX_RANGES", n_ranges)
+        assert rows() == base, n_ranges
 
 
 def test_dedup_clusters_roots_are_members_and_minimal(spark):
@@ -298,26 +308,6 @@ def test_q94_strategies_agree(spark):
     )
     assert base == two
     assert base  # non-vacuous: the fixture plants near-dup clusters
-
-
-def test_global_deciles_invariant_to_range_count(spark):
-    """q100's distributed global rank must be invariant to the number
-    of range partitions (the cluster-size knob)."""
-    from pandamapreduce_spark.plans import pipeline
-    from tests.conftest import SF_DIR
-
-    def rows(n_ranges):
-        orig = pipeline.RANK_RANGES
-        pipeline.RANK_RANGES = n_ranges
-        try:
-            return [
-                tuple(r)
-                for r in pipeline.q100_global_quality_deciles(spark, SF_DIR).collect()
-            ]
-        finally:
-            pipeline.RANK_RANGES = orig
-
-    assert rows(3) == rows(17)
 
 
 def test_context_chunks_cover_every_token(spark):

@@ -8,6 +8,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from pandamapreduce_spark.plans import REGISTRY
 
@@ -61,26 +62,25 @@ def _assert_canon_hashable(name, got):
             assert bad.empty, f"{name}.{col}: Inf values {bad.head().tolist()}"
 
 
-def test_registry_schemas_scalar_only(spark):
+def _assert_atomic_schema(name, df):
     """Every registered query's OUTPUT SCHEMA must be atomic-typed —
     no array/map/struct columns ever reach the driver's canonicalizer
-    (the q128 class, closed for good). Schema-only: builds each plan
-    lazily, executes nothing heavier than the bounded driver summaries
-    some plans compute while building."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    offenders = []
-    for name, q in REGISTRY.items():
-        for f in q.build(spark, SF_DIR).schema.fields:
-            if isinstance(f.dataType, (ArrayType, MapType, StructType)):
-                offenders.append(f"{name}.{f.name}: {f.dataType.simpleString()}")
+    (the q128 class). Checked on the frame each parity test already
+    builds, so the registry is built once per run."""
+    offenders = [
+        f"{name}.{f.name}: {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if isinstance(f.dataType, (ArrayType, MapType, StructType))
+    ]
     assert not offenders, offenders
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle(spark, oracle, name):
     q = REGISTRY[name]
-    got = q.build(spark, SF_DIR).toPandas()
+    df = q.build(spark, SF_DIR)
+    _assert_atomic_schema(name, df)
+    got = df.toPandas()
     _assert_canon_hashable(name, got)
     want = oracle.execute(q.oracle).df()
 
@@ -95,6 +95,7 @@ def test_query_matches_oracle(spark, oracle, name):
 def test_rows_only_query_runs(spark, name):
     q = REGISTRY[name]
     df = q.build(spark, SF_DIR)
+    _assert_atomic_schema(name, df)
     n = df.count()
     assert n >= 0
     assert df.schema == q.build(spark, SF_DIR).schema

@@ -839,7 +839,10 @@ import pytest as _pytest
 @_pytest.mark.parametrize(
     "name",
     [
+        "q90_sequence_packing",
+        "q96_vocab_build",
         "q100_global_quality_deciles",
+        "q141_pps_sample",
         "q163_quantile_normalize",
         "q177_rfm_segments",
         "q189_pareto_abc",
@@ -851,7 +854,7 @@ def test_prefix_offsets_are_broadcast_joined(spark, name):
     a broadcast-joined one-row-per-range table: the plan must contain a
     broadcast join keyed on ``_pid`` and must NOT contain the retired
     chained CASE WHEN over range ids (whose expression tree grows with
-    RANK_RANGES — a cluster-size-dependent plan is the anti-pattern).
+    PREFIX_RANGES — a cluster-size-dependent plan is the anti-pattern).
     Composes with the existing no-partition-less-window guards."""
     df = REGISTRY[name].build(spark, SF_DIR)
     plan = df._jdf.queryExecution().optimizedPlan().toString()

@@ -189,20 +189,21 @@ def test_bucketed_knn_plan_uses_cogrouped_arrow(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_range_prefix_exact_global_rank_and_sum(spark):
-    """Unit contract of the shared prefix operator (q100/q163/q177/
-    q189/q202's machinery): _base + per-range row_number == the naive
+def test_range_prefix_exact_global_rank_and_sum(spark, monkeypatch):
+    """Unit contract of the shared prefix operator (every distributed
+    prefix lane's machinery): _base + per-range row_number == the naive
     single-partition global rank, and _base_sum prefixes exactly —
     on synthetic data WITH heavy duplicate keys, at a range count
     that forces splits."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from pandamapreduce_spark.operators.prefix import range_prefix
+    from pandamapreduce_spark.operators import prefix
 
+    monkeypatch.setattr(prefix, "PREFIX_RANGES", 5)
     rows = [(i % 7, i, (i * 13) % 101) for i in range(500)]  # dup-heavy key0
     df = spark.createDataFrame(rows, "k int, id bigint, v bigint")
-    parts, n_total, s_total = range_prefix(df, ["k", "id"], sum_col="v", ranges=5)
+    parts, n_total, s_total = prefix.range_prefix(df, ["k", "id"], sum_col="v")
     assert n_total == 500
     assert s_total == sum(r[2] for r in rows)
     w = W.partitionBy("_pid").orderBy("k", "id")
@@ -222,11 +223,12 @@ def test_range_prefix_exact_global_rank_and_sum(spark):
         assert got[(k, i)] == (rank0, acc), (k, i)
 
 
-def test_range_prefix_empty_input(spark):
-    from pandamapreduce_spark.operators.prefix import range_prefix
+def test_range_prefix_empty_input(spark, monkeypatch):
+    from pandamapreduce_spark.operators import prefix
 
+    monkeypatch.setattr(prefix, "PREFIX_RANGES", 4)
     df = spark.createDataFrame([], "k int, v bigint")
-    parts, n_total, s_total = range_prefix(df, ["k"], sum_col="v", ranges=4)
+    parts, n_total, s_total = prefix.range_prefix(df, ["k"], sum_col="v")
     assert n_total == 0 and s_total == 0 and parts.count() == 0
 
 

@@ -375,7 +375,8 @@ def test_extended_stats_match_numpy(spark):
 
 def test_pps_sample_invariants(spark):
     """q141: Σ multiplicity == K exactly; every doc with n ≥ T/K is
-    sampled; result invariant to the range-partition count."""
+    sampled. Range-count invariance is pinned with the other prefix
+    lanes in test_invariants."""
     import duckdb
 
     import pandamapreduce_spark.plans.training as tr
@@ -398,13 +399,6 @@ def test_pps_sample_invariants(spark):
     ).fetchall()
     for (d,) in big:
         assert d in sampled, f"doc {d} with n >= T/K missed"
-    orig = tr.PPS_RANGES
-    try:
-        tr.PPS_RANGES = 3
-        narrow = tr.q141_pps_sample(spark, SF_DIR).collect()
-    finally:
-        tr.PPS_RANGES = orig
-    assert [tuple(r) for r in narrow] == [tuple(r) for r in rows]
 
 
 def test_group_ols_matches_numpy(spark):
