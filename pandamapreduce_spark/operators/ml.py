@@ -14,7 +14,7 @@ MapReduce k-means; the loop lives on the driver, data never collects.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pandamapreduce_spark.caching import release_one, scoped_persist
@@ -90,21 +90,21 @@ def gmm_em(
     x = F.col(vec_col)
     vectors = scoped_persist(vectors)
     loglik: list[float] = []
+
+    def log_density(c: int) -> Column:
+        """log p(x, z=c) under the current parameters."""
+        mu = F.array(*[F.lit(v) for v in mus[c]])
+        d2 = dot(x, x) - 2 * dot(x, mu) + F.lit(sum(v * v for v in mus[c]))
+        return -d2 / (2 * sig2[c]) + F.lit(
+            math.log(pis[c]) - 0.5 * dim * math.log(2 * math.pi * sig2[c])
+        )
+
     try:
         for _ in range(iterations):
             # E-step: log p(x, z=c) for each component, stable softmax
-            xx = dot(x, x)
-            comps = []
-            for c in range(k):
-                mu = F.array(*[F.lit(v) for v in mus[c]])
-                d2 = xx - 2 * dot(x, mu) + F.lit(sum(v * v for v in mus[c]))
-                logp = -d2 / (2 * sig2[c]) + F.lit(
-                    math.log(pis[c]) - 0.5 * dim * math.log(2 * math.pi * sig2[c])
-                )
-                comps.append(logp.alias(f"lp{c}"))
+            comps = [log_density(c).alias(f"lp{c}") for c in range(k)]
             scored = vectors.select(id_col, vec_col, *comps)
             mx = F.greatest(*[F.col(f"lp{c}") for c in range(k)])
-            den = sum_col = None
             exps = [F.exp(F.col(f"lp{c}") - mx) for c in range(k)]
             den = exps[0]
             for e in exps[1:]:
@@ -149,13 +149,7 @@ def gmm_em(
                 mus[c] = new_mu
                 sig2[c] = max((e_x2 - sum(m * m for m in new_mu)) / dim, 1e-6)
         # final assignment
-        xx = dot(x, x)
-        comps = []
-        for c in range(k):
-            mu = F.array(*[F.lit(v) for v in mus[c]])
-            d2 = xx - 2 * dot(x, mu) + F.lit(sum(v * v for v in mus[c]))
-            logp = -d2 / (2 * sig2[c]) + F.lit(math.log(pis[c]) - 0.5 * dim * math.log(2 * math.pi * sig2[c]))
-            comps.append(F.struct(logp.alias("lp"), F.lit(c).alias("cid")))
+        comps = [F.struct(log_density(c).alias("lp"), F.lit(c).alias("cid")) for c in range(k)]
         best = F.array_max(F.array(*comps))
         assigned = vectors.withColumn("component", best["cid"]).withColumn("log_score", best["lp"])
         params = {"pis": pis, "mus": mus, "sig2": sig2}

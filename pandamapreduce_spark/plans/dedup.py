@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.functions import (
-    cosine,
     cosine_sql,
     hex16,
     hex16_sql,
@@ -395,7 +394,7 @@ def q34b_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Sub-block grid width for q35's blocked strategy: each label's pair
+#: Sub-block grid width for q35's pair scan: each label's pair
 #: scan splits into EMB_PAIR_BLOCKS^2 cogrouped Arrow tasks.
 EMB_PAIR_BLOCKS = 4
 
@@ -450,62 +449,51 @@ def _emb_pairs_pdf(a_pdf, b_pdf, tau: float = 0.93, ordered: bool = True):
     )
 
 
-@query(
-    "q35_embedding_neardup",
-    oracle=f"""
+def _emb_neardup_sql(tau: float) -> str:
+    """q35's oracle at any cosine threshold (tests replay it at the
+    planted-geometry τ that ``_emb_neardup_pairs`` is called with)."""
+    return f"""
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            {cosine_sql("a.embedding", "b.embedding")} AS cos_sim
     FROM embeddings a JOIN embeddings b
       ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {cosine_sql("a.embedding", "b.embedding")} >= 0.93
+    WHERE {cosine_sql("a.embedding", "b.embedding")} >= {tau}
     ORDER BY vec_a, vec_b
-    """,
+    """
+
+
+@query(
+    "q35_embedding_neardup",
+    oracle=_emb_neardup_sql(0.93),
     doc="Embedding-cosine near-dup: label-blocked pair scan, cosine >= 0.93.",
     tags=("dedup", "embedding"),
 )
-def q35_embedding_neardup(
-    spark: SparkSession, sf_dir: str, strategy: str = "blocked"
-) -> DataFrame:
+def q35_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: blocking on label turns O(n²) into Σ O(n_b²); for real
     corpora the block key is an LSH bucket (q41) — same plan shape.
 
-    Two strategies, identical frame (pytest-pinned, the q166
-    discipline): ``hof`` is the original codegen label self-join —
-    correct but a scale trap the round-9 full-registry sf1 sweep
-    exposed: with 10 labels the join's effective parallelism is the
-    label-bucket count, AQE's coalesce then merges those partitions
-    BY INPUT BYTES (20k embedding rows look tiny) into ~2 tasks, and
-    the ~44M per-pair HOF cosine folds that EXPLODE INSIDE the join
-    grind near-single-threaded — 35+ min at sf1 for what is seconds
-    of numpy arithmetic. ``blocked`` (default) splits each label into
-    an EMB_PAIR_BLOCKS x EMB_PAIR_BLOCKS cogroup grid keyed
-    (label, left vec_id%B, right vec_id%B) — each unordered pair
-    meets in exactly ONE task (the left<right filter dedups the p=q
-    diagonal), tasks are labels x B^2, and the per-task cosine matrix
-    is the q166 kernel's bitwise IEEE fold (``_emb_pairs_pdf``), so
-    the emitted values are unchanged."""
-    return _emb_neardup_pairs(load_table(spark, sf_dir, "embeddings"), strategy)
+    Each label splits into an EMB_PAIR_BLOCKS x EMB_PAIR_BLOCKS
+    cogroup grid keyed (label, left vec_id%B, right vec_id%B) — each
+    unordered pair meets in exactly ONE task (the left<right filter
+    dedups the p=q diagonal), tasks are labels x B^2, and the per-task
+    cosine matrix is the q166 kernel's bitwise IEEE fold
+    (``_emb_pairs_pdf``). A plain label self-join is a scale trap:
+    with 10 labels its effective parallelism is the label-bucket
+    count, AQE's coalesce then merges those partitions BY INPUT BYTES
+    (20k embedding rows look tiny) into ~2 tasks, and the ~44M
+    per-pair cosine folds inside the join grind near-single-threaded —
+    35+ min at sf1 for what is seconds of numpy arithmetic."""
+    return _emb_neardup_pairs(load_table(spark, sf_dir, "embeddings"))
 
 
-def _emb_neardup_pairs(
-    emb: DataFrame, strategy: str = "blocked", tau: float = 0.93, sort: bool = True
-) -> DataFrame:
+def _emb_neardup_pairs(emb: DataFrame, tau: float = 0.93, sort: bool = True) -> DataFrame:
     """q35's pair scan over any (vec_id, embedding, label) frame —
-    split out so the strategy-equality pytest can feed a PLANTED
-    high-similarity frame (the driver fixtures are near-isotropic and
-    emit zero >= 0.93 pairs there, which would make the equality
-    vacuous). ``tau``/``sort`` let q87's hybrid lane reuse the same
-    scan (its HYBRID_COS threshold, unsorted — the union re-groups
-    anyway, a trailing sort would be a wasted exchange)."""
-    if strategy == "hof":
-        a, b = emb.alias("a"), emb.alias("b")
-        cos = cosine(F.col("a.embedding"), F.col("b.embedding"))
-        pairs = (
-            a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-            .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"), cos.alias("cos_sim"))
-            .where(F.col("cos_sim") >= F.lit(tau))
-        )
-        return pairs.orderBy("vec_a", "vec_b") if sort else pairs
+    split out so tests can feed a PLANTED high-similarity frame (the
+    parquet fixtures are near-isotropic and emit zero >= 0.93 pairs
+    there, which would make an equality check vacuous). ``tau``/``sort``
+    let q87's hybrid lane reuse the same scan (its HYBRID_COS
+    threshold, unsorted — the union re-groups anyway, a trailing sort
+    would be a wasted exchange)."""
     nb_lit = F.lit(EMB_PAIR_BLOCKS)
     partners = F.array(*[F.lit(i) for i in range(EMB_PAIR_BLOCKS)])
     # vec_id % B assumes NON-NEGATIVE ids (Spark % keeps the dividend's

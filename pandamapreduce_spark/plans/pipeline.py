@@ -357,7 +357,7 @@ def q87_hybrid_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     input bytes into ~2 tasks (measured 1548 s at sf1 vs 66 s for the
     ANN twin q87b). The grid splits each label into B×B cogrouped
     Arrow tasks with the bitwise-IEEE cosine kernel, so emitted values
-    are unchanged (strategy-equality pytest; sf1: 1548 s → seconds).
+    are unchanged (DuckDB-oracle pytest; sf1: 1548 s → seconds).
     The union then groups by pair, so a pair found by both methods
     reports 'lexical+semantic'. Methods aggregate as a '+'-joined
     sorted string (not an array — scalar columns canonicalize
@@ -373,7 +373,7 @@ def q87_hybrid_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", F.lit("lexical").alias("method"))
     )
     emb = load_table(spark, sf_dir, "embeddings")
-    sem = _emb_neardup_pairs(emb, strategy="blocked", tau=HYBRID_COS, sort=False).select(
+    sem = _emb_neardup_pairs(emb, tau=HYBRID_COS, sort=False).select(
         F.col("vec_a").alias("doc_a"),
         F.col("vec_b").alias("doc_b"),
         F.lit("semantic").alias("method"),

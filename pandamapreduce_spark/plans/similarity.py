@@ -603,20 +603,6 @@ MUTUAL_K = 5
 MUTUAL_BLOCKS = 8  # corpus row-blocks for the Arrow GEMM path
 
 
-def _knn_hof(emb: DataFrame) -> DataFrame:
-    """All-pairs top-k via the JVM HOF cosine — the original codegen
-    path; O(n^2) rows flow through the join."""
-    a = emb.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("a_emb"))
-    b = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("b_emb"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        a.join(b, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("a_emb"), F.col("b_emb")).alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= MUTUAL_K)
-    )
-
-
 def _block_topk_pdf(a_pdf, b_pdf):
     """One Arrow task of the blocked kNN kernel: each left (query) row's
     local top-MUTUAL_K against the right (candidate) rows, cosine with
@@ -778,7 +764,7 @@ def _allpairs_knn_ranked_sql() -> str:
     doc=f"Mutual k-NN graph over the embedding corpus: cosine top-{MUTUAL_K} per vector, keep only RECIPROCATED pairs (each inside the other's top-{MUTUAL_K}) — the symmetrized neighborhood graph density-based clustering and embedding near-dup build on; exact brute-force contract, bucketed (q41) / IVF (q55) candidate generation is the documented scale path.",
     tags=("similarity", "knn", "graph"),
 )
-def q166_mutual_knn(spark: SparkSession, sf_dir: str, strategy: str = "blocked") -> DataFrame:
+def q166_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-NN graph SYMMETRIZATION: a directed cosine top-k edge is kept
     only if reciprocated — mutual edges are robust to hubness (a hub
     appears in everyone's top-k but reciprocates only its true
@@ -786,12 +772,10 @@ def q166_mutual_knn(spark: SparkSession, sf_dir: str, strategy: str = "blocked")
     density clustering (DBSCAN-family), manifold methods, and
     embedding-space near-dup mining on top of the q94 components.
 
-    Two strategies, identical frame (pytest-pinned): ``blocked`` (the
-    default) runs the all-pairs arithmetic as cogrouped Arrow block
-    products — numpy array ops with the JVM fold's exact IEEE
-    sequence, 13.8x faster at sf1 (793.6 -> 57.6 s) — while ``hof``
-    keeps the original per-pair codegen expression join (zero Python,
-    wins only below ~1k vectors where the Arrow round-trip dominates).
+    The all-pairs arithmetic runs as cogrouped Arrow block products
+    (``_knn_blocked``) — numpy array ops with the JVM fold's exact
+    IEEE sequence, 13.8x faster at sf1 (793.6 -> 57.6 s) than a
+    per-pair codegen expression join.
 
     Scale shape: block pairs are MUTUAL_BLOCKS^2 independent tasks
     (each side's shuffle carries MUTUAL_BLOCKS copies of the vectors);
@@ -805,8 +789,7 @@ def q166_mutual_knn(spark: SparkSession, sf_dir: str, strategy: str = "blocked")
     from pandamapreduce_spark.caching import scoped_persist
 
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    knn = _knn_blocked(emb) if strategy == "blocked" else _knn_hof(emb)
-    knn = scoped_persist(knn)  # both sides of the reciprocity join read it
+    knn = scoped_persist(_knn_blocked(emb))  # both sides of the reciprocity join read it
     rev = knn.select(
         F.col("query_id").alias("r_query"),
         F.col("neighbor_id").alias("r_neighbor"),
@@ -993,7 +976,7 @@ def q172_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution is match -> cluster -> survive. Matching is q120's
     multi-pass blocked fuzzy join (sub-quadratic, skew-capped);
     clustering is the shared ``connected_components`` operator (q94's
-    min-label propagation, two_phase escalation available); the
+    min-label propagation); the
     survivorship rule elects the longest record (most information),
     ties to the smallest doc_id — all deterministic.
 
@@ -1005,7 +988,7 @@ def q172_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pandamapreduce_spark.plans.training import connected_components
 
     pairs = q120_fuzzy_join(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _ = connected_components(pairs)
+    labels = connected_components(pairs)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     w = Window.partitionBy("entity_id").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
     ranked = (
@@ -1185,7 +1168,7 @@ def _semdedup_verdict(spark: SparkSession, sf_dir: str, mutual: DataFrame) -> Da
         .where(F.col("cos_sim") >= SEMDEDUP_TAU)
         .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
     )
-    labels, _ = connected_components(edges)
+    labels = connected_components(edges)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     w = Window.partitionBy("cluster_id").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
     return (
@@ -1200,7 +1183,7 @@ def _semdedup_verdict(spark: SparkSession, sf_dir: str, mutual: DataFrame) -> Da
 # --- q203: bucketed SemDeDup — the production-scale candidate path ----------
 
 
-def _mutual_knn_bucketed(emb: DataFrame, strategy: str = "blocked") -> DataFrame:
+def _mutual_knn_bucketed(emb: DataFrame) -> DataFrame:
     """Directed top-k restricted to sign-LSH candidates, then q166's
     reciprocity join — the mutual edge frame (vec_a, vec_b, rank_ab,
     rank_ba, cos_sim) from a SUB-QUADRATIC candidate set.
@@ -1228,15 +1211,12 @@ def _mutual_knn_bucketed(emb: DataFrame, strategy: str = "blocked") -> DataFrame
     lanes the probe side here is the WHOLE corpus, so nothing
     broadcasts — both sides shuffle once on the bucket key.
 
-    Two strategies, identical frame (pytest-pinned, the q166
-    discipline): ``blocked`` (default) runs each probe bucket as ONE
-    cogrouped Arrow task — left side the queries probing that bucket,
-    right side the corpus vectors stored in it, kernel shared with
-    q166 (`_block_topk_pdf`, same IEEE fold) — probe candidates are
-    disjoint across a query's buckets, so the final per-query window
-    over per-bucket top-ks is exact; ``hof`` keeps the per-pair
-    codegen expression join (zero Python, wins only on tiny buckets).
-    Measured at sf0.1: 18.3 s (hof) -> see PERF.md (blocked)."""
+    Each probe bucket runs as ONE cogrouped Arrow task — left side the
+    queries probing that bucket, right side the corpus vectors stored
+    in it, kernel shared with q166 (`_block_topk_pdf`, same IEEE fold)
+    — and probe candidates are disjoint across a query's buckets, so
+    the final per-query window over per-bucket top-ks is exact. A
+    per-pair codegen probe join measured 18.3 s at sf0.1 (PERF.md)."""
     b = emb.select(
         "vec_id", "embedding", _bucket_col("embedding", SEMDEDUP_PLANES).alias("bucket")
     )
@@ -1247,42 +1227,18 @@ def _mutual_knn_bucketed(emb: DataFrame, strategy: str = "blocked") -> DataFrame
         ]
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    if strategy == "blocked":
-        from pandamapreduce_spark.lineage import detach
-
-        q = b.select("vec_id", "embedding", F.explode(probe_arr).alias("probe"))
-        # detach: probe and corpus sides both derive from `b` — a
-        # self-cogroup (lineage.detach; count()-shaped downstream
-        # plans otherwise prune the corpus side's payload columns).
-        cands = q.groupBy("probe").cogroup(detach(b).groupBy("bucket")).applyInPandas(
-            lambda left, right: _block_topk_pdf(left, right),
-            schema="query_id long, neighbor_id long, cos_sim double",
-        )
-        knn = cands.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= MUTUAL_K)
-    else:
-        q = b.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.explode(probe_arr).alias("probe"),
-        )
-        c = b.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("c_emb"),
-            F.col("bucket").alias("c_bucket"),
-        )
-        knn = (
-            q.join(
-                c,
-                (F.col("probe") == F.col("c_bucket"))
-                & (F.col("query_id") != F.col("neighbor_id")),
-            )
-            .select(
-                "query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_sim")
-            )
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= MUTUAL_K)
-        )
     from pandamapreduce_spark.caching import scoped_persist
+    from pandamapreduce_spark.lineage import detach
+
+    q = b.select("vec_id", "embedding", F.explode(probe_arr).alias("probe"))
+    # detach: probe and corpus sides both derive from `b` — a
+    # self-cogroup (lineage.detach; count()-shaped downstream plans
+    # otherwise prune the corpus side's payload columns).
+    cands = q.groupBy("probe").cogroup(detach(b).groupBy("bucket")).applyInPandas(
+        lambda left, right: _block_topk_pdf(left, right),
+        schema="query_id long, neighbor_id long, cos_sim double",
+    )
+    knn = cands.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= MUTUAL_K)
 
     knn = scoped_persist(knn)  # both sides of the reciprocity join read it
     rev = knn.select(

@@ -515,100 +515,29 @@ def q93_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_MAX_ITERS = 20
 
 
-def connected_components(
-    edges: DataFrame, strategy: str = "label_prop", max_iters: int = CC_MAX_ITERS
-) -> tuple[DataFrame, int]:
+def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
     """Connected components over an undirected edge list ``(doc_a,
-    doc_b)`` → ``(doc_id, label)`` with label = component minimum,
-    plus the number of iterations actually run.
+    doc_b)`` → ``(doc_id, label)`` with label = component minimum.
 
-    Two strategies, same answer:
+    Iterative min-label propagation: each round every node takes the
+    min of its own and its neighbors' labels — one union + one
+    partial-agg groupBy per round on (node, label) pairs, converging
+    in O(diameter) rounds. Near-dup and match graphs are shallow
+    (diameter ≤ 3-4 hops), so 2-3 rounds suffice. A graph that has
+    not converged after ``max_iters`` rounds raises ``RuntimeError``
+    rather than returning partial labels.
 
-    - ``label_prop`` — iterative min-label propagation: each round
-      every node takes the min of its own and its neighbors' labels.
-      One join + one partial-agg groupBy per round on (node, label)
-      pairs; converges in O(diameter) rounds. The production default
-      for near-dup graphs, whose clusters are shallow (diameter ≤ 3-4
-      hops), so 2-3 rounds beat the two-phase setup cost.
-
-    - ``two_phase`` — alternating large-star/small-star rewiring
-      (the public MapReduce CC algorithm of Kiveris et al.,
-      "Connected Components in MapReduce and Beyond", also the shape
-      GraphFrames uses): large-star hangs every larger neighbor of u
-      onto min(N(u) ∪ u); small-star hangs the smaller neighbors.
-      Each round shuffles only canonical (hi, lo) node pairs and
-      STRICTLY shrinks path lengths multiplicatively, so convergence
-      is O(log n) rounds on ANY graph — the escalation for
-      adversarial-diameter graphs (long chains, web-graph tendrils)
-      where label_prop's O(diameter) rounds would dominate. At
-      convergence the edge set IS the answer: a star forest with
-      every node attached directly to its component minimum.
-
-    Both converge-check with a count (never a collect). Per-round
+    Convergence is checked with a count (never a collect). Per-round
     state is cut over with an EAGER ``localCheckpoint``, not a bare
     persist: persist truncates re-EXECUTION but not the logical plan,
     so Catalyst re-analyzes a plan that doubles every round and
     analysis time itself goes exponential past ~10 iterations
     (measured: 1.2 s/round at iter 2 → 9.5 s at iter 5 on an 18-row
     chain). Checkpointing resets the lineage to the materialized
-    result each round — constant per-round cost, which is what an
-    O(log n)-round algorithm needs to actually BE O(log n). On a
-    cluster the same cutover is ``checkpoint()`` to the reliable
-    store; local mode uses the executor-local variant."""
-    if strategy == "two_phase":
-        # canonical (hi, lo) pairs, hi > lo — the only shuffled shape
-        e = scoped_persist(
-            edges.select(
-                F.greatest("doc_a", "doc_b").alias("hi"),
-                F.least("doc_a", "doc_b").alias("lo"),
-            )
-            .where(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-        iters = 0
-        for _ in range(max_iters):
-            iters += 1
-            # large-star over the symmetric view: per node u, attach
-            # every neighbor v > u to m = min(N(u) ∪ {u})
-            sym = e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).union(
-                e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-            )
-            mn = sym.groupBy("u").agg(F.min("v").alias("nbr_min"))
-            m = F.least(F.col("u"), F.col("nbr_min"))
-            large = (
-                sym.join(mn, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("hi"), m.alias("lo"))
-                .where(F.col("hi") != F.col("lo"))
-                .distinct()
-            )
-            # small-star over canonical pairs: per hub, rewire every
-            # smaller neighbor (and the hub) onto the minimum
-            mn2 = large.groupBy("hi").agg(F.min("lo").alias("m"))
-            j = large.join(mn2, "hi")
-            new_e = (
-                j.where(F.col("lo") != F.col("m"))
-                .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
-                .union(mn2.select(F.col("hi"), F.col("m").alias("lo")))
-                .where(F.col("hi") != F.col("lo"))
-                .distinct()
-            )
-            new_e = scoped_checkpoint(new_e)
-            # fixpoint = identical edge sets; both sides canonical +
-            # distinct, so equal counts + empty difference suffice —
-            # and the difference short-circuits on count alone almost
-            # every converged round
-            changed = new_e.count() != e.count() or new_e.exceptAll(e).count() > 0
-            release_one(e)  # the count above was the last read of the old round
-            e = new_e
-            if not changed:
-                break
-        labels = e.select(F.col("hi").alias("doc_id"), F.col("lo").alias("label")).union(
-            e.select(F.col("lo").alias("doc_id"), F.col("lo").alias("label"))
-        )
-        return labels.groupBy("doc_id").agg(F.min("label").alias("label")), iters
-
-    # r11 per-round reshape (guide §2.4 — fewer exchanges per round):
+    result each round — constant per-round cost. On a cluster the same
+    cutover is ``checkpoint()`` to the reliable store; local mode uses
+    the executor-local variant."""
+    # Round shape (guide §2.4 — fewer exchanges per round):
     #
     # - union+agg instead of join+agg+left-join: every node already has
     #   its own row in ``labels``, so the candidate set {own label} ∪
@@ -624,8 +553,7 @@ def connected_components(
     # candidates in the same union) was measured too: it does cut a
     # planted diameter-16 chain from 17 rounds to 6, but on the real
     # near-dup graph it saved zero rounds (shallow components) and its
-    # extra per-round self-join cost ~25% — high-diameter graphs are
-    # what the two_phase escalation is for, so label_prop stays
+    # extra per-round self-join cost ~25%, so the round stays
     # jump-free.
     sym = edges.select(F.col("doc_a"), F.col("doc_b")).union(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
@@ -636,9 +564,7 @@ def connected_components(
     )
     null_lbl = F.lit(None).cast(labels.schema["label"].dataType)
     held = labels  # the registered cache backing ``labels`` (release target)
-    iters = 0
     for _ in range(max_iters):
-        iters += 1
         own = labels.select("doc_id", "label", F.col("label").alias("old"))
         nbr = (
             e.join(labels, e["doc_b"] == labels["doc_id"])
@@ -657,8 +583,8 @@ def connected_components(
         held = new_labels
         labels = new_labels.select("doc_id", "label")
         if changed == 0:
-            break
-    return labels, iters
+            return labels
+    raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
 
 
 @query(
@@ -684,21 +610,13 @@ def connected_components(
     doc="Near-dup cluster resolution: connected components over verified LSH pairs (iterative min-label propagation); canonical root + size per member.",
     tags=("training", "dedup", "iterative"),
 )
-def q94_dedup_clusters(
-    spark: SparkSession, sf_dir: str, strategy: str = "label_prop"
-) -> DataFrame:
+def q94_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production dedup keeps ONE doc per near-dup cluster, not per
     pair: q33's verified pairs are edges; connected components give
     each member its cluster root (the minimum doc_id — the canonical
-    survivor) and cluster size.
-
-    Both :func:`connected_components` strategies return the identical
-    frame here (pytest-pinned): ``label_prop`` (the default — near-dup
-    clusters are shallow, so O(diameter) rounds means 2-3) and the
-    ``two_phase`` large-star/small-star rewiring whose O(log n) rounds
-    are the escalation for adversarial-diameter graphs (the planted
-    17-node-path pytest pins it to ≤7 rounds where label_prop needs
-    the full 17 diameter-bound rounds).
+    survivor) and cluster size. Near-dup clusters are shallow, so
+    :func:`connected_components`' min-label propagation converges in
+    2-3 rounds.
 
     This is the one iterative operator WITH a full value-hash oracle:
     DuckDB computes the same components via a recursive CTE.
@@ -706,7 +624,7 @@ def q94_dedup_clusters(
     from pandamapreduce_spark.plans.dedup import q33_neardup_verified
 
     pairs = q33_neardup_verified(spark, sf_dir).select("doc_a", "doc_b")
-    labels, _ = connected_components(pairs, strategy=strategy)
+    labels = connected_components(pairs)
     w = Window.partitionBy("cluster_root")
     return (
         labels.select("doc_id", F.col("label").alias("cluster_root"))

@@ -1965,18 +1965,15 @@ def q187_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _basket_pairs(spark, sf_dir, KHOP_SUPPORT).select("a", "b")
     edges = scoped_persist(pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))))
     deg = edges.groupBy(F.col("a").alias("pk")).agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
-    # r11 (guide §3.1): the support-filtered edge list, the canonical
-    # pair list and the degree table are all bounded small sides
-    # (integer pairs) — broadcast them so the wedge walk streams the
-    # persisted edge frame once with zero pre-join shuffles
-    # (before-plan: 32 Exchange / 10 BHJ built from re-exchanged sides).
+    # The edge list and the pair list grow with sf, so their joins are
+    # left to the planner (AQE still broadcasts them while they are
+    # small). Only the degree frames carry a broadcast hint: one row
+    # per vertex, two integers wide.
     e1, e2 = edges.alias("e1"), edges.alias("e2")
     tri = e1.join(
-        F.broadcast(e2), (F.col("e1.b") == F.col("e2.a")) & (F.col("e1.a") < F.col("e2.b"))
+        e2, (F.col("e1.b") == F.col("e2.a")) & (F.col("e1.a") < F.col("e2.b"))
     ).select(F.col("e1.a").alias("u"), F.col("e2.b").alias("w"), F.col("e1.b").alias("v"))
-    nonedge = tri.join(
-        F.broadcast(pairs), (tri["u"] == pairs["a"]) & (tri["w"] == pairs["b"]), "left_anti"
-    )
+    nonedge = tri.join(pairs, (tri["u"] == pairs["a"]) & (tri["w"] == pairs["b"]), "left_anti")
     dv = deg.select(F.col("pk").alias("v"), F.col("deg").alias("deg_v"))
     ra_term = F.round(F.lit(1.0) / F.col("deg_v").cast("double"), 9).cast("decimal(18,9)")
     scored = (

@@ -23,3 +23,16 @@ def oracle():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
     yield con
     con.close()
+
+
+def duckdb_rows(sql: str, **frames) -> list[tuple]:
+    """Rows of ``sql`` run by a fresh DuckDB connection in which each
+    keyword frame (pandas or Arrow) is registered under its name —
+    the oracle side of tests that feed a planted or re-read frame."""
+    con = duckdb.connect()
+    try:
+        for name, frame in frames.items():
+            con.register(name, frame)
+        return con.sql(sql).fetchall()
+    finally:
+        con.close()

@@ -271,43 +271,23 @@ def test_dedup_clusters_roots_are_members_and_minimal(spark):
         assert all(s == len(members) for s in [r["cluster_size"] for r in rows if r["cluster_root"] == root])
 
 
-def test_connected_components_two_phase_on_long_chain(spark):
-    """VERDICT r5 #8: the large-star/small-star escalation must (a)
-    produce the same components as min-label propagation, and (b)
-    converge in O(log n) rounds on an adversarial-diameter graph where
-    label_prop needs O(diameter) — pinned on a planted 17-node path
-    graph (diameter 16)."""
+def test_connected_components_on_long_chain(spark):
+    """Min-label propagation walks the min label one hop per round, so
+    a planted 17-node path (diameter 16) needs 16 propagation rounds
+    plus the no-change round: with ``max_iters=64`` it lands the exact
+    component labels, and with ``max_iters=8`` it must raise rather
+    than return partial labels."""
     from pandamapreduce_spark.plans.training import connected_components
 
     n = 17
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)] + [(100, 101)], ["doc_a", "doc_b"]
     )
-    lp, lp_iters = connected_components(chain, "label_prop", max_iters=64)
-    tp, tp_iters = connected_components(chain, "two_phase", max_iters=64)
+    labels = connected_components(chain, max_iters=64)
     want = sorted([(i, 0) for i in range(n)] + [(100, 100), (101, 100)])
-    assert sorted((r["doc_id"], r["label"]) for r in lp.collect()) == want
-    assert sorted((r["doc_id"], r["label"]) for r in tp.collect()) == want
-    # label_prop walks the min label one hop per round (diameter-bound:
-    # 16 propagation rounds + the no-change detection round); two-phase
-    # contracts paths multiplicatively
-    assert lp_iters >= n - 1
-    assert tp_iters <= 7, tp_iters
-    assert tp_iters < lp_iters / 2
-
-
-def test_q94_strategies_agree(spark):
-    """q94 returns the identical frame under both CC strategies."""
-    from tests.conftest import SF_DIR
-
-    from pandamapreduce_spark.plans.training import q94_dedup_clusters
-
-    base = sorted(tuple(r) for r in q94_dedup_clusters(spark, SF_DIR).collect())
-    two = sorted(
-        tuple(r) for r in q94_dedup_clusters(spark, SF_DIR, strategy="two_phase").collect()
-    )
-    assert base == two
-    assert base  # non-vacuous: the fixture plants near-dup clusters
+    assert sorted((r["doc_id"], r["label"]) for r in labels.collect()) == want
+    with pytest.raises(RuntimeError, match="did not converge in 8 rounds"):
+        connected_components(chain, max_iters=8)
 
 
 def test_context_chunks_cover_every_token(spark):

@@ -2,10 +2,11 @@
 
 1. q87's semantic side now reuses q35's blocked cogroup-grid scan with
    tau threaded through (HYBRID_COS) — the r9 verdict's one scale-weak
-   (label self-join, 1548 s at sf1). Equality is pinned on planted
-   geometry at a NON-default tau so the tau plumbing itself is
-   exercised (the driver fixtures emit zero >= 0.93 pairs — vacuous).
-2. The `_emb_pairs_pdf` zero-norm guard now matches the HOF cosine()
+   (label self-join, 1548 s at sf1). Equality with q35's DuckDB oracle
+   is pinned on planted geometry at a NON-default tau so the tau
+   plumbing itself is exercised (the parquet fixtures emit zero >= 0.93
+   pairs — vacuous).
+2. The `_emb_pairs_pdf` zero-norm guard now matches the JVM cosine()
    bit-for-bit ((na>0)&(nb>0), ADVICE r9) — pinned with an explicit
    zero vector.
 """
@@ -14,20 +15,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from tests.test_round9 import planted_embeddings
-
-
-def _planted_frame(spark, n_bg, n_cohorts, size, target_cos, seed):
-    ids, V = planted_embeddings(n_bg, n_cohorts, size, target_cos, seed)
-    return spark.createDataFrame(
-        [
-            # cohort members are consecutive ids: integer-divide by the
-            # cohort size so each cohort stays inside one label block
-            (int(i), [float(x) for x in np.asarray(v, dtype=np.float32)], int(i) // size % 5)
-            for i, v in zip(ids, V)
-        ],
-        "vec_id long, embedding array<float>, label int",
-    ).repartition(8)
+from tests.conftest import duckdb_rows
+from tests.test_round9 import planted_embeddings, planted_frame
 
 
 def test_self_cogroup_survives_count_shaped_plans(spark):
@@ -47,20 +36,19 @@ def test_self_cogroup_survives_count_shaped_plans(spark):
 
 
 def test_emb_pairs_tau_threading_blocked_equals_hof(spark):
-    """Blocked grid vs HOF label self-join at tau=0.5 on target-cos-0.7
-    planted cohorts: same pairs, bitwise-same cosines. This is q87's
-    semantic side by construction (q87 calls `_emb_neardup_pairs` with
-    tau=HYBRID_COS); a tau that silently stayed 0.93 would emit zero
-    pairs here and fail the count floor."""
-    from pandamapreduce_spark.plans.dedup import _emb_neardup_pairs
+    """The cogroup-grid pair scan at tau=0.5 on target-cos-0.7 planted
+    cohorts vs q35's oracle SQL at the same tau: same pairs,
+    bitwise-same cosines. This is q87's semantic side by construction
+    (q87 calls `_emb_neardup_pairs` with tau=HYBRID_COS); a tau that
+    silently stayed 0.93 would emit zero pairs here and fail the count
+    floor. The name dates from when the reference side was the
+    since-removed HOF self-join."""
+    from pandamapreduce_spark.plans.dedup import _emb_neardup_pairs, _emb_neardup_sql
 
-    emb = _planted_frame(spark, 100, 20, 3, target_cos=0.7, seed=13)
-    blocked = sorted(
-        tuple(r) for r in _emb_neardup_pairs(emb, "blocked", tau=0.5, sort=False).collect()
-    )
-    hof = sorted(tuple(r) for r in _emb_neardup_pairs(emb, "hof", tau=0.5, sort=False).collect())
-    assert len(blocked) >= 10, "planted cohorts produced no tau=0.5 pairs — vacuous"
-    assert blocked == hof
+    pdf, emb = planted_frame(spark, 100, 20, 3, target_cos=0.7, seed=13)
+    got = sorted(tuple(r) for r in _emb_neardup_pairs(emb, tau=0.5, sort=False).collect())
+    assert len(got) >= 10, "planted cohorts produced no tau=0.5 pairs — vacuous"
+    assert got == duckdb_rows(_emb_neardup_sql(0.5), embeddings=pdf)
 
 
 def test_q87_semantic_side_is_q35_scan(spark):
@@ -82,7 +70,7 @@ def test_q87_semantic_side_is_q35_scan(spark):
     emb = load_table(spark, sf_dir, "embeddings")
     want = sorted(
         (r.vec_a, r.vec_b)
-        for r in _emb_neardup_pairs(emb, "blocked", tau=HYBRID_COS, sort=False).collect()
+        for r in _emb_neardup_pairs(emb, tau=HYBRID_COS, sort=False).collect()
     )
     assert sem_pairs == want
     assert len(out) > 0  # lexical side keeps the lane non-vacuous
@@ -138,7 +126,7 @@ def test_q210_recall_floor_on_planted_production_tau(spark):
 
 def test_emb_pairs_zero_norm_guard_matches_hof(spark):
     """An all-zero embedding must emit cosine 0.0 (never NaN/inf) from
-    the blocked kernel, exactly as the HOF guard (na>0)&(nb>0) does —
+    the blocked kernel, exactly as the JVM cosine() guard (na>0)&(nb>0) does —
     and pairing a zero vector with a near-dup cohort must not emit a
     pair at any tau > 0."""
     import pandas as pd

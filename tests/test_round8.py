@@ -28,7 +28,7 @@ from pandamapreduce_spark.plans.similarity import (
     _probe_masks,
 )
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, duckdb_rows
 
 
 def _sequential_cosine_matrix(A: np.ndarray, B: np.ndarray) -> np.ndarray:
@@ -164,15 +164,22 @@ def test_bucketed_semdedup_recall_vs_exact(spark):
 
 
 def test_bucketed_knn_strategies_agree(spark):
-    """q166 discipline: the cogrouped-Arrow default and the zero-Python
-    HOF join must produce the identical mutual edge frame."""
+    """The bucketed mutual edge frame vs its DuckDB oracle SQL on the
+    sf0.001 fixture: same pairs, ranks, and bitwise cosines. The name
+    dates from when the reference side was the since-removed HOF
+    probe join."""
+    import pyarrow.parquet as pq
+
     from pandamapreduce_spark.catalog import load_table
+    from pandamapreduce_spark.plans.similarity import _semdedup_bucketed_mutual_sql
 
     emb = load_table(spark, SF_DIR, "embeddings", spread=True)
-    blocked = sorted(map(tuple, _mutual_knn_bucketed(emb, "blocked").collect()))
-    hof = sorted(map(tuple, _mutual_knn_bucketed(emb, "hof").collect()))
-    assert blocked == hof
-    assert blocked, "fixture produced no mutual edges"
+    got = sorted(map(tuple, _mutual_knn_bucketed(emb).collect()))
+    assert got, "fixture produced no mutual edges"
+    want = duckdb_rows(
+        _semdedup_bucketed_mutual_sql(), embeddings=pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    )
+    assert got == want
 
 
 def test_bucketed_knn_plan_uses_cogrouped_arrow(spark):

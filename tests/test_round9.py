@@ -18,6 +18,7 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from pandamapreduce_spark.plans.similarity import (
@@ -26,6 +27,7 @@ from pandamapreduce_spark.plans.similarity import (
     _mutual_knn_bucketed,
 )
 
+from tests.conftest import duckdb_rows
 from tests.test_round8 import _python_bucketed_mutual, _sequential_cosine_matrix
 
 
@@ -59,6 +61,27 @@ def planted_embeddings(
     bg /= np.linalg.norm(bg, axis=1, keepdims=True)
     V = np.vstack([np.array(vecs), bg]).astype(np.float32).astype(np.float64)
     return np.arange(len(V), dtype=np.int64), V
+
+
+def planted_frame(spark, n_bg, n_cohorts, size, target_cos, seed):
+    """``planted_embeddings`` as identical (vec_id, embedding, label)
+    frames: pandas (for DuckDB) and Spark (for the plan). Cohort
+    members are CONSECUTIVE ids, so label = id // size % 5 keeps each
+    planted cohort inside one label block (id % 5 would scatter them
+    and produce zero same-label pairs)."""
+    ids, V = planted_embeddings(n_bg, n_cohorts, size, target_cos, seed)
+    pdf = pd.DataFrame(
+        {
+            "vec_id": ids,
+            "embedding": [[float(x) for x in np.asarray(v, dtype=np.float32)] for v in V],
+            "label": (ids // size % 5).astype(np.int32),
+        }
+    )
+    emb = spark.createDataFrame(
+        [(int(i), e, int(lbl)) for i, e, lbl in pdf.itertuples(index=False)],
+        "vec_id long, embedding array<float>, label int",
+    ).repartition(8)
+    return pdf, emb
 
 
 def exact_mutual_tau_edges(ids: np.ndarray, V: np.ndarray, tau: float) -> set[tuple[int, int]]:
@@ -385,28 +408,15 @@ def test_sharded_wedge_oracle_equals_monolithic():
 
 
 def test_q35_blocked_equals_hof_on_planted_geometry(spark):
-    """q35's blocked cogroup-grid strategy vs the original HOF label
-    self-join, on a planted high-similarity frame (the driver
-    fixtures are near-isotropic and both strategies emit ZERO >= 0.93
-    pairs there — equality would be vacuous; at sf1 only the blocked
-    path is practical, which is the point of the strategy). Pairs,
-    ids, and bitwise cosines must agree, and the planted cohorts must
-    produce a non-trivial pair count."""
-    from pandamapreduce_spark.plans.dedup import _emb_neardup_pairs
+    """q35's cogroup-grid pair scan vs its DuckDB oracle on a planted
+    high-similarity frame (the parquet fixtures are near-isotropic and
+    emit ZERO >= 0.93 pairs — equality would be vacuous there). Pairs,
+    ids, and bitwise cosines must be exactly equal, and the planted
+    cohorts must produce a non-trivial pair count. The name dates from
+    when the reference side was the since-removed HOF self-join."""
+    from pandamapreduce_spark.plans.dedup import _emb_neardup_pairs, _emb_neardup_sql
 
-    ids, V = planted_embeddings(120, 25, 3, target_cos=0.96, seed=7)
-    emb = spark.createDataFrame(
-        [
-            # label = i//3 % 5: cohort members are CONSECUTIVE ids, so
-            # integer-dividing by the cohort size keeps each planted
-            # cohort inside one label block (i % 5 scattered them and
-            # produced zero same-label pairs — vacuous again)
-            (int(i), [float(x) for x in np.asarray(v, dtype=np.float32)], int(i) // 3 % 5)
-            for i, v in zip(ids, V)
-        ],
-        "vec_id long, embedding array<float>, label int",
-    ).repartition(8)
-    blocked = [tuple(r) for r in _emb_neardup_pairs(emb, "blocked").collect()]
-    hof = [tuple(r) for r in _emb_neardup_pairs(emb, "hof").collect()]
-    assert len(blocked) >= 10, "planted cohorts produced no pairs — vacuous"
-    assert blocked == hof
+    pdf, emb = planted_frame(spark, 120, 25, 3, target_cos=0.96, seed=7)
+    got = [tuple(r) for r in _emb_neardup_pairs(emb).collect()]
+    assert len(got) >= 10, "planted cohorts produced no pairs — vacuous"
+    assert got == duckdb_rows(_emb_neardup_sql(0.93), embeddings=pdf)

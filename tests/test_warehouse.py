@@ -1656,18 +1656,6 @@ def test_rfm_matches_pandas_bruteforce(spark):
     assert got["n_customers"].sum() == len(cust)
 
 
-def test_mutual_knn_strategies_identical(spark):
-    """q166's blocked Arrow path and the HOF codegen path return the
-    IDENTICAL frame at sf0.001 — same pairs, ranks, and bitwise cosine
-    (the blocked kernel reproduces the JVM fold's IEEE sequence)."""
-    from pandamapreduce_spark.plans.similarity import q166_mutual_knn
-
-    blocked = q166_mutual_knn(spark, SF_DIR, strategy="blocked").toPandas()
-    hof = q166_mutual_knn(spark, SF_DIR, strategy="hof").toPandas()
-    assert [tuple(r) for r in blocked.to_numpy()] == [tuple(r) for r in hof.to_numpy()]
-    assert len(blocked) > 0
-
-
 def test_lateness_audit_matches_python_replay(spark):
     """q178 vs a literal Python replay walk at sf0.001 (same md5
     arrival key, per-user running max, ceil-second lateness)."""
