@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.operators import tera
-from pandamapreduce_spark.operators.mapreduce import MapFn, ReduceFn, map_reduce, map_reduce_sorted
+from pandamapreduce_spark.operators.mapreduce import MapFn, ReduceFn, map_reduce
 from pandamapreduce_spark.session import get_spark
 
 
@@ -300,8 +300,7 @@ class MapReduceJob:
         self._combine_f: ReduceFn | None = None
         self._reduce_f: ReduceFn | None = None
         self._num_reducers: int | None = None
-        self._partition_f: Callable[[Any], int] | None = None
-        self._sort_keys = False
+        self._partition_f: Callable[[Any], int] | str | None = None
 
     def set_map(self, f: MapFn) -> "MapReduceJob":
         self._map_f = f
@@ -322,13 +321,7 @@ class MapReduceJob:
     def set_partitioner(self, p: str | Callable[[Any], int]) -> "MapReduceJob":
         """'hash' (default, reference O10), 'range' (reference O11 —
         ordered delivery), or a callable key -> partition id."""
-        if p == "hash":
-            self._partition_f = None
-        elif p == "range":
-            self._sort_keys = True
-            self._partition_f = None
-        else:
-            self._partition_f = p
+        self._partition_f = None if p == "hash" else p
         return self
 
     def add_input(self, data: RDD | Iterable[tuple], num_partitions: int | None = None) -> "MapReduceJob":
@@ -346,24 +339,6 @@ class MapReduceJob:
         rdd = self._inputs[0]
         for extra in self._inputs[1:]:
             rdd = rdd.union(extra)
-        if self._sort_keys:
-            # range partitioner: total-order delivery via
-            # repartitionAndSortWithinPartitions on the mapped output.
-            # Capture callbacks as locals: closures must not reference
-            # self (it drags the SparkSession into the task closure).
-            map_f, reduce_f = self._map_f, self._reduce_f
-            mapped = rdd.flatMap(lambda kv: map_f(kv[0], kv[1]))
-            num = self._num_reducers or rdd.context.defaultParallelism
-            kv = map_reduce_sorted(mapped, num)
-
-            def group_reduce(it):
-                import itertools
-
-                # within a sorted partition, equal keys are adjacent
-                for k, group in itertools.groupby(it, key=lambda kv: kv[0]):
-                    yield k, reduce_f(k, [v for _, v in group])
-
-            return kv.mapPartitions(group_reduce, preservesPartitioning=True)
         return map_reduce(
             rdd,
             self._map_f,

@@ -1,13 +1,16 @@
-"""Vector column functions over ``array<float>`` embedding columns.
+"""Cosine similarity over ``array<float>`` embedding columns, in its
+three forms: the JVM column expression (``cosine``), the DuckDB SQL
+text the oracles use (``cosine_sql``), and the numpy block kernel the
+cogrouped Arrow similarity joins use (``cosine_block``).
 
 All arithmetic is double-precision, sequential left-to-right fold —
 the same evaluation order DuckDB's list functions use — so cosine /
-dot values are bitwise-reproducible against the oracle.
+dot values are bitwise-reproducible against the oracle in every form.
 
-JVM-side only (``zip_with`` + ``aggregate``): no Python crosses the
-per-row path, and the expressions participate in codegen. For very
-wide vectors a Pandas-UDF BLAS path could win; at 64-dim the JVM
-expression is faster than the Arrow round-trip.
+The column expressions are JVM-side (``zip_with`` + ``aggregate``): no
+Python crosses the per-row path, and they participate in codegen.
+``cosine_block`` is for all-pairs work inside one Arrow task, where
+numpy array ops over a whole block beat per-pair codegen rows.
 """
 
 from __future__ import annotations
@@ -53,3 +56,35 @@ def cosine_sql(a: str, b: str) -> str:
         f"THEN list_dot_product(cast({a} as double[]), cast({b} as double[])) / ({da} * {db}) "
         f"ELSE 0.0 END"
     )
+
+
+def cosine_block(a_pdf, b_pdf):
+    """Every pair of one left and one right pandas block (``vec_id``,
+    ``embedding`` columns; other columns are ignored): returns
+    ``(aid, bid, cos)`` with ``cos[i, j]`` the cosine of left row i and
+    right row j. Both blocks must be non-empty.
+
+    Bitwise contract: reproduces ``cosine`` EXACTLY — elements cast
+    float32 -> float64 first, products rounded one at a time,
+    accumulated SEQUENTIALLY over dimensions (a python loop over d of
+    vectorized adds: each += is one correctly-rounded IEEE add per
+    element, same order as the JVM fold and DuckDB's
+    list_dot_product), norms the same way, then cos = dot / (na * nb)
+    with the identical two roundings and the identical zero-norm guard
+    (na > 0) & (nb > 0). NO np.dot/BLAS — pairwise summation would
+    re-associate the fold and could flip a rank at a 1-ulp tie."""
+    import numpy as np
+
+    A = np.stack(a_pdf["embedding"].to_numpy()).astype(np.float64)
+    B = np.stack(b_pdf["embedding"].to_numpy()).astype(np.float64)
+    dot = np.zeros((len(A), len(B)))
+    na = np.zeros(len(A))
+    nb = np.zeros(len(B))
+    for d in range(A.shape[1]):  # sequential fold, one rounded add per step
+        dot += A[:, d, None] * B[None, :, d]
+        na += A[:, d] * A[:, d]
+        nb += B[:, d] * B[:, d]
+    na, nb = np.sqrt(na), np.sqrt(nb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.where((na[:, None] > 0) & (nb[None, :] > 0), dot / (na[:, None] * nb[None, :]), 0.0)
+    return a_pdf["vec_id"].to_numpy(), b_pdf["vec_id"].to_numpy(), cos

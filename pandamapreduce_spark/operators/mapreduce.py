@@ -63,21 +63,22 @@ def map_reduce(
     reduce_f: ReduceFn,
     combine_f: ReduceFn | None = None,
     num_reducers: int | None = None,
-    partition_f: Callable[[Any], int] | None = None,
-    sort_keys: bool = False,
+    partition_f: Callable[[Any], int] | str | None = None,
 ) -> RDD:
     """Run the full map → combine → shuffle → group → reduce pipeline.
 
     Args mirror the reference's ``job_configuration``
     (``include/Panda.h:124-143``): ``num_reducers`` = num_reducers,
     ``combine_f`` = local_combiner flag + callback, ``partition_f`` =
-    Partitioner::GetHash, ``sort_keys`` = ordered delivery (terasort's
-    framework-grouped ordering, SURVEY A5).
+    Partitioner::GetHash — a callable key -> partition id, or
+    ``"range"`` for total-order delivery (the terasort partitioner,
+    ``apps/terasort/TeraSortPartitioner.cpp:24-33``): ``sortByKey``
+    samples key bounds and range-partitions, so partition i's keys
+    all precede partition i+1's and arrive sorted within it.
 
     Returns an RDD of (key, reduced_value).
     """
     num = num_reducers or rdd.context.defaultParallelism
-    part = partition_f or portable_hash
 
     mapped = rdd.flatMap(lambda kv: map_f(kv[0], kv[1]))
 
@@ -93,30 +94,17 @@ def map_reduce(
 
         mapped = mapped.mapPartitions(local_combine)
 
-    shuffled = mapped.partitionBy(num, part)
+    if partition_f == "range":
+        shuffled = mapped.sortByKey(numPartitions=num)
+    else:
+        shuffled = mapped.partitionBy(num, partition_f or portable_hash)
 
     def reduce_partition(it: Iterable[tuple[Any, Any]]) -> Iterable[tuple[Any, Any]]:
+        # keys come out in arrival order: sorted under "range"
         buf: dict[Any, list[Any]] = defaultdict(list)
         for k, v in it:
             buf[k].append(v)
-        keys = sorted(buf) if sort_keys else buf
-        for k in keys:
-            yield k, reduce_f(k, buf[k])
+        for k, vs in buf.items():
+            yield k, reduce_f(k, vs)
 
     return shuffled.mapPartitions(reduce_partition, preservesPartitioning=True)
-
-
-def map_reduce_sorted(
-    rdd: RDD,
-    num_partitions: int,
-    key_f: Callable[[Any], Any] | None = None,
-) -> RDD:
-    """Total-order delivery: range-partition + in-partition sort — the
-    terasort shape (``TeraSort.scala:60-63``). ``sortByKey`` samples
-    key bounds (the reference's O11 prefix-split, generalized) and
-    range-partitions so partition i's keys all precede partition
-    i+1's. Map/reduce identity, the 'query' is purely ordered placement
-    (reference A5: callbacks are no-ops,
-    ``apps/terasort/terasort_api.cu:20-48``)."""
-    kv = rdd.map(lambda kv: (key_f(kv) if key_f else kv[0], kv))
-    return kv.sortByKey(numPartitions=num_partitions).values()

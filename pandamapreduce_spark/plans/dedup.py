@@ -400,46 +400,25 @@ EMB_PAIR_BLOCKS = 4
 
 
 def _emb_pairs_pdf(a_pdf, b_pdf, tau: float = 0.93, ordered: bool = True):
-    """One Arrow task of q35's blocked pair scan: every (left, right)
-    pair with left.vec_id < right.vec_id and cosine >= tau. Cosine is
-    the q166 kernel's exact IEEE sequence (float32 -> float64 casts,
-    one correctly-rounded add per dimension, cos = dot/(na*nb) with
-    the identical two roundings) so the emitted values are bitwise
-    equal to the JVM HOF fold and DuckDB's list_dot_product.
-    ``ordered=False`` drops the id ordering and emits the full cross
-    product above tau — the delta-vs-base shape (q210), where the two
-    sides are disjoint id sets and every cross pair is wanted."""
+    """Threshold emitter over ``functions.vector.cosine_block``: every
+    (left, right) pair with left.vec_id < right.vec_id and cosine >=
+    tau, values bitwise equal to the JVM fold and DuckDB's
+    list_dot_product. ``ordered=False`` drops the id ordering and
+    emits the full cross product above tau — the delta-vs-base shape
+    (q210), where the two sides are disjoint id sets and every cross
+    pair is wanted."""
     import numpy as np
     import pandas as pd
 
-    empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []}).astype(
-        {"vec_a": "int64", "vec_b": "int64", "cos_sim": "float64"}
-    )
+    from pandamapreduce_spark.functions.vector import cosine_block
+
     if a_pdf.empty or b_pdf.empty:
-        return empty
-    A = np.stack(a_pdf["embedding"].to_numpy()).astype(np.float64)
-    B = np.stack(b_pdf["embedding"].to_numpy()).astype(np.float64)
-    aid = a_pdf["vec_id"].to_numpy()
-    bid = b_pdf["vec_id"].to_numpy()
-    dot = np.zeros((len(aid), len(bid)))
-    na = np.zeros(len(aid))
-    nb = np.zeros(len(bid))
-    for d in range(A.shape[1]):  # sequential fold, one rounded add per step
-        dot += A[:, d, None] * B[None, :, d]
-        na += A[:, d] * A[:, d]
-        nb += B[:, d] * B[:, d]
-    na, nb = np.sqrt(na), np.sqrt(nb)
-    denom = na[:, None] * nb[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        # Guard matches the HOF cosine() exactly — (na>0)&(nb>0), not
-        # denom>0 — so a denormal-underflow denom can never diverge
-        # from the JVM path (ADVICE r9; unreachable on float32
-        # fixtures, pinned anyway).
-        cos = np.where((na[:, None] > 0) & (nb[None, :] > 0), dot / denom, 0.0)
+        return pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []}).astype(
+            {"vec_a": "int64", "vec_b": "int64", "cos_sim": "float64"}
+        )
+    aid, bid, cos = cosine_block(a_pdf, b_pdf)
     idmask = (aid[:, None] < bid[None, :]) if ordered else np.ones_like(cos, dtype=bool)
     ii, jj = np.nonzero(idmask & (cos >= tau))
-    if not len(ii):
-        return empty
     return pd.DataFrame(
         {
             "vec_a": aid[ii].astype("int64"),
@@ -473,11 +452,12 @@ def q35_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora the block key is an LSH bucket (q41) — same plan shape.
 
     Each label splits into an EMB_PAIR_BLOCKS x EMB_PAIR_BLOCKS
-    cogroup grid keyed (label, left vec_id%B, right vec_id%B) — each
-    unordered pair meets in exactly ONE task (the left<right filter
-    dedups the p=q diagonal), tasks are labels x B^2, and the per-task
-    cosine matrix is the q166 kernel's bitwise IEEE fold
-    (``_emb_pairs_pdf``). A plain label self-join is a scale trap:
+    cogroup grid keyed (label, left vec_id%B, right vec_id%B) — the
+    grid builder q166 also uses (``similarity._cogroup_grid``) — so
+    each unordered pair meets in exactly ONE task (the left<right
+    filter dedups the p=q diagonal), tasks are labels x B^2, and each
+    task runs the threshold emitter (``_emb_pairs_pdf``) over the
+    shared bitwise cosine block. A plain label self-join is a scale trap:
     with 10 labels its effective parallelism is the label-bucket
     count, AQE's coalesce then merges those partitions BY INPUT BYTES
     (20k embedding rows look tiny) into ~2 tasks, and the ~44M
@@ -494,32 +474,14 @@ def _emb_neardup_pairs(emb: DataFrame, tau: float = 0.93, sort: bool = True) -> 
     let q87's hybrid lane reuse the same scan (its HYBRID_COS
     threshold, unsorted — the union re-groups anyway, a trailing sort
     would be a wasted exchange)."""
-    nb_lit = F.lit(EMB_PAIR_BLOCKS)
-    partners = F.array(*[F.lit(i) for i in range(EMB_PAIR_BLOCKS)])
-    # vec_id % B assumes NON-NEGATIVE ids (Spark % keeps the dividend's
-    # sign; a negative id would land outside [0, B) and meet no partner
-    # block). All fixture/corpus ids are unsigned surrogates; use
-    # F.pmod here if ids can ever be negative (ADVICE r9).
-    own = (F.col("vec_id") % nb_lit).cast("int")  # q166's type lesson: the
-    # cogroup key must be the same TYPE on both sides
-    from pandamapreduce_spark.lineage import detach
+    from pandamapreduce_spark.plans.similarity import _cogroup_grid
 
-    a_tag = emb.select(
-        "vec_id", "embedding", "label", own.alias("ba"), F.explode(partners).alias("bb")
-    )
-    # detach: self-cogroup right side MUST NOT share the left's
-    # attribute refs or column pruning can strip its payload columns
-    # under count()-shaped downstream plans (see lineage.detach).
-    b_tag = detach(emb).select(
-        "vec_id", "embedding", "label", F.explode(partners).alias("ba"), own.alias("bb")
-    )
-    pairs = (
-        a_tag.groupBy("label", "ba", "bb")
-        .cogroup(b_tag.groupBy("label", "ba", "bb"))
-        .applyInPandas(
-            lambda left, right: _emb_pairs_pdf(left, right, tau=tau),
-            schema="vec_a long, vec_b long, cos_sim double",
-        )
+    pairs = _cogroup_grid(
+        emb,
+        lambda left, right: _emb_pairs_pdf(left, right, tau=tau),
+        "vec_a long, vec_b long, cos_sim double",
+        EMB_PAIR_BLOCKS,
+        keys=("label",),
     )
     return pairs.orderBy("vec_a", "vec_b") if sort else pairs
 

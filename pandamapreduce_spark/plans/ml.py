@@ -332,13 +332,17 @@ def _cmeans_oracle_sql(k: int = 4, iters: int = 3, dim: int = DIM) -> str:
     iteration count unrolls to plain CTEs and the whole loop is
     bit-reproducible. (GMM's log-sum-exp E-step hits exp/ln, where JVM
     and libm may differ in the last ulp, so q59 instead pins literal
-    expected rows per fixture — see ``_q59_oracle_sql``.)"""
+    expected rows per fixture — see ``_q59_oracle_sql``.)
+
+    Every CTE is MATERIALIZED: un-hinted DuckDB inlines the chain and
+    re-expands each membership CTE per reference (60.6 s -> 0.1 s at
+    sf0.001, identical rows)."""
     DECM = "decimal(28,12)"
     dp = "list_dot_product"
     parts = [
-        "WITH v AS (SELECT vec_id, cast(embedding as double[]) AS x FROM embeddings)",
-        f"seed AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, x AS c FROM v ORDER BY vec_id LIMIT {k})",
-        "cp0 AS (SELECT "
+        "WITH v AS MATERIALIZED (SELECT vec_id, cast(embedding as double[]) AS x FROM embeddings)",
+        f"seed AS MATERIALIZED (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, x AS c FROM v ORDER BY vec_id LIMIT {k})",
+        "cp0 AS MATERIALIZED (SELECT "
         + ", ".join(f"(SELECT c FROM seed WHERE cid={c}) AS cc{c}" for c in range(k))
         + ")",
     ]
@@ -351,8 +355,8 @@ def _cmeans_oracle_sql(k: int = 4, iters: int = 3, dim: int = DIM) -> str:
         den = " + ".join(f"(1.0 / d{c})" for c in range(k))  # cid-order sum, matching the Spark fold
         ucols = ", ".join(f"(1.0 / d{c}) / ({den}) AS u{c}" for c in range(k))
         return (
-            f"{name}d AS (SELECT v.vec_id, v.x, {dcols} FROM v CROSS JOIN {cp}),\n"
-            f"{name} AS (SELECT *, {ucols} FROM {name}d)"
+            f"{name}d AS MATERIALIZED (SELECT v.vec_id, v.x, {dcols} FROM v CROSS JOIN {cp}),\n"
+            f"{name} AS MATERIALIZED (SELECT *, {ucols} FROM {name}d)"
         )
 
     def mstep_cte(perdim: str, memb: str, cpnext: str) -> str:
@@ -362,8 +366,8 @@ def _cmeans_oracle_sql(k: int = 4, iters: int = 3, dim: int = DIM) -> str:
         )
         lists = ", ".join(f"(SELECT list(m{c} ORDER BY i) FROM {perdim}) AS cc{c}" for c in range(k))
         return (
-            f"{perdim} AS (SELECT r.i AS i, {aggs} FROM {memb}, range(1, {dim + 1}) r(i) GROUP BY r.i),\n"
-            f"{cpnext} AS (SELECT {lists})"
+            f"{perdim} AS MATERIALIZED (SELECT r.i AS i, {aggs} FROM {memb}, range(1, {dim + 1}) r(i) GROUP BY r.i),\n"
+            f"{cpnext} AS MATERIALIZED (SELECT {lists})"
         )
 
     for it in range(iters):
@@ -371,7 +375,7 @@ def _cmeans_oracle_sql(k: int = 4, iters: int = 3, dim: int = DIM) -> str:
         parts.append(mstep_cte(f"pd{it}", f"m{it}", f"cp{it + 1}"))
     parts.append(memb_cte(f"m{iters}", f"cp{iters}"))
     jterm = " + ".join(f"cast(u{c} * u{c} * d{c} as {DECM})" for c in range(k))
-    parts.append(f"obj AS (SELECT cast(sum({jterm}) as double) AS j FROM m{iters})")
+    parts.append(f"obj AS MATERIALIZED (SELECT cast(sum({jterm}) as double) AS j FROM m{iters})")
     masses = " UNION ALL ".join(
         f"SELECT {c} AS cluster, (SELECT cast(round(sum(cast(u{c} as {DECM})), 4) as double) FROM m{iters}) AS fuzzy_mass, (SELECT j FROM obj) AS final_objective"
         for c in range(k)

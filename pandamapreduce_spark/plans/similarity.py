@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.functions import cosine, cosine_sql, dot
+from pandamapreduce_spark.functions.vector import cosine_block
 from pandamapreduce_spark.plans.registry import query
 
 N_PLANES = 8
@@ -209,13 +210,10 @@ def q74_multiprobe_lsh_knn(
     if emb is None:
         emb = load_table(spark, sf_dir, "embeddings", spread=True)
     b = emb.select("vec_id", "embedding", _bucket_col("embedding").alias("bucket"))
-    probe_arr = F.array(
-        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(N_PLANES)]
-    )
     q = b.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        F.explode(probe_arr).alias("probe"),
+        F.explode(_probe_array(N_PLANES, 1)).alias("probe"),
     )
     c = b.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), F.col("bucket").alias("c_bucket"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
@@ -602,14 +600,16 @@ MUTUAL_K = 5
 
 MUTUAL_BLOCKS = 8  # corpus row-blocks for the Arrow GEMM path
 
+#: output schema of the top-k emitter (``_block_topk_pdf``)
+_KNN_SCHEMA = "query_id long, neighbor_id long, cos_sim double"
+
 
 def _block_topk_pdf(a_pdf, b_pdf):
-    """One Arrow task of the blocked kNN kernel: each left (query) row's
-    local top-MUTUAL_K against the right (candidate) rows, cosine with
-    the JVM fold's exact IEEE sequence (see ``_knn_blocked``). Shared
-    by q166's all-pairs block grid and q203's per-bucket cogroup —
-    extra key columns on either frame are ignored (only ``vec_id`` and
-    ``embedding`` are read)."""
+    """Top-k emitter over ``functions.vector.cosine_block``: each left
+    (query) row's local top-MUTUAL_K against the right (candidate)
+    rows, itself excluded, ties to the smaller id. The global top-k is
+    always contained in the union of these local top-ks, so the kNN
+    tail's window over them is exact."""
     import numpy as np
     import pandas as pd
 
@@ -617,30 +617,12 @@ def _block_topk_pdf(a_pdf, b_pdf):
         return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos_sim": []}).astype(
             {"query_id": "int64", "neighbor_id": "int64", "cos_sim": "float64"}
         )
-    A = np.stack(a_pdf["embedding"].to_numpy()).astype(np.float64)
-    B = np.stack(b_pdf["embedding"].to_numpy()).astype(np.float64)
-    aid = a_pdf["vec_id"].to_numpy()
-    bid = b_pdf["vec_id"].to_numpy()
-    nA, nB = len(aid), len(bid)
-    dot = np.zeros((nA, nB))
-    na = np.zeros(nA)
-    nb = np.zeros(nB)
-    for d in range(A.shape[1]):  # sequential fold, one rounded add per step
-        dot += A[:, d, None] * B[None, :, d]
-        na += A[:, d] * A[:, d]
-        nb += B[:, d] * B[:, d]
-    na, nb = np.sqrt(na), np.sqrt(nb)
-    denom = na[:, None] * nb[None, :]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        cos = np.where(denom > 0, dot / denom, 0.0)
+    aid, bid, cos = cosine_block(a_pdf, b_pdf)
     out_q, out_n, out_c = [], [], []
-    k = MUTUAL_K
-    for i in range(nA):
-        row = cos[i]
+    for i in range(len(aid)):
         mask = bid != aid[i]
-        cand_ids = bid[mask]
-        cand_cos = row[mask]
-        order = np.lexsort((cand_ids, -cand_cos))[:k]
+        cand_ids, cand_cos = bid[mask], cos[i][mask]
+        order = np.lexsort((cand_ids, -cand_cos))[:MUTUAL_K]
         out_q.append(np.full(len(order), aid[i]))
         out_n.append(cand_ids[order])
         out_c.append(cand_cos[order])
@@ -653,48 +635,66 @@ def _block_topk_pdf(a_pdf, b_pdf):
     )
 
 
-def _knn_blocked(emb: DataFrame) -> DataFrame:
-    """All-pairs top-k via cogrouped Arrow block products: the corpus
-    splits into MUTUAL_BLOCKS row-blocks, every block PAIR becomes one
-    applyInPandas task that emits each query row's local top-k against
-    the partner block, and a final window ranks the per-block
-    candidates (the global top-k is always contained in the union of
-    per-block top-ks). 13.8x faster than the HOF join at sf1 (793.6 s
-    -> 57.6 s measured; 6.8 -> 4.2 s at sf0.1) because the O(n^2)
-    arithmetic runs as numpy array ops instead of per-pair codegen
-    rows.
-
-    Bitwise contract: inside each task the per-pair cosine
-    (``_block_topk_pdf``) reproduces ``functions.vector.cosine``
-    EXACTLY — elements cast float32 -> float64 first, products rounded
-    one at a time, accumulated SEQUENTIALLY over dimensions (a python
-    loop over d of vectorized adds: each += is one correctly-rounded
-    IEEE add per element, same order as the JVM fold and DuckDB's
-    list_dot_product), norms the same way, then cos = dot / (na * nb)
-    with the identical two roundings. NO np.dot/BLAS — pairwise
-    summation would re-associate the fold and could flip a rank at a
-    1-ulp tie."""
-    nb_lit = F.lit(MUTUAL_BLOCKS)
-    partners = F.array(*[F.lit(i) for i in range(MUTUAL_BLOCKS)])
-    own = (F.col("vec_id") % nb_lit).cast("int")  # cast: the cogroup key
-    # must be the same TYPE on both sides — a bigint modulo against the
-    # int explode literals silently yields per-side groups that never
-    # pair up (observed: every (ba,bb) key materialized twice, one side
-    # empty in each).
+def _cogroup_grid(emb: DataFrame, emit, schema: str, blocks: int, keys: tuple = ()) -> DataFrame:
+    """All-pairs blocking for a (vec_id, embedding, *keys) frame: each
+    ``keys`` group splits into ``blocks`` row-blocks by vec_id % blocks,
+    every block PAIR becomes one cogrouped ``applyInPandas(emit)`` task
+    (left side: rows of block ba, right side: rows of block bb), so
+    every ordered pair of rows sharing ``keys`` meets in exactly one
+    task. q166 runs it over the whole corpus with the top-k emitter,
+    q35/q87 per label with the threshold emitter."""
     from pandamapreduce_spark.lineage import detach
 
-    a_tag = emb.select("vec_id", "embedding", own.alias("ba"), F.explode(partners).alias("bb"))
+    partners = F.explode(F.array(*[F.lit(i) for i in range(blocks)]))
+    # vec_id % B assumes NON-NEGATIVE ids (Spark % keeps the dividend's
+    # sign; a negative id would land outside [0, B) and meet no partner
+    # block); use F.pmod if ids can ever be negative. The cast matters:
+    # the cogroup key must be the same TYPE on both sides — a bigint
+    # modulo against the int explode literals silently yields per-side
+    # groups that never pair up.
+    own = (F.col("vec_id") % F.lit(blocks)).cast("int")
+    cols = ["vec_id", "embedding", *keys]
+    a = emb.select(*cols, own.alias("ba"), partners.alias("bb"))
     # detach: self-cogroup right side must not share the left's
     # attribute refs (lineage.detach — count()-shaped downstream plans
     # otherwise prune its payload columns).
-    b_tag = detach(emb).select("vec_id", "embedding", F.explode(partners).alias("ba"), own.alias("bb"))
-    cands = a_tag.groupBy("ba", "bb").cogroup(b_tag.groupBy("ba", "bb")).applyInPandas(
-        lambda left, right: _block_topk_pdf(left, right),
-        schema="query_id long, neighbor_id long, cos_sim double",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return cands.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= MUTUAL_K)
+    b = detach(emb).select(*cols, partners.alias("ba"), own.alias("bb"))
+    grid = [*keys, "ba", "bb"]
+    return a.groupBy(*grid).cogroup(b.groupBy(*grid)).applyInPandas(emit, schema=schema)
 
+
+def _mutual_knn(cands: DataFrame) -> DataFrame:
+    """The kNN tail q166 and q203 share: a per-query top-MUTUAL_K window
+    over the top-k emitter's candidates, persisted, then the
+    RECIPROCITY join — keep a directed edge only if the reverse edge
+    is in the other vector's top-k. Emits each mutual pair once
+    (vec_a < vec_b) with both ranks: (vec_a, vec_b, rank_ab, rank_ba,
+    cos_sim)."""
+    from pandamapreduce_spark.caching import scoped_persist
+
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    knn = cands.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= MUTUAL_K)
+    knn = scoped_persist(knn)  # both sides of the reciprocity join read it
+    rev = knn.select(
+        F.col("query_id").alias("r_query"),
+        F.col("neighbor_id").alias("r_neighbor"),
+        F.col("rank").alias("rank_ba"),
+    )
+    return (
+        knn.join(
+            rev,
+            (F.col("query_id") == F.col("r_neighbor"))
+            & (F.col("neighbor_id") == F.col("r_query")),
+        )
+        .where(F.col("query_id") < F.col("neighbor_id"))
+        .select(
+            F.col("query_id").alias("vec_a"),
+            F.col("neighbor_id").alias("vec_b"),
+            F.col("rank").alias("rank_ab"),
+            "rank_ba",
+            "cos_sim",
+        )
+    )
 
 
 #: Query-side shard count for the all-pairs ranked-window ORACLES
@@ -772,10 +772,14 @@ def q166_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     density clustering (DBSCAN-family), manifold methods, and
     embedding-space near-dup mining on top of the q94 components.
 
-    The all-pairs arithmetic runs as cogrouped Arrow block products
-    (``_knn_blocked``) — numpy array ops with the JVM fold's exact
-    IEEE sequence, 13.8x faster at sf1 (793.6 -> 57.6 s) than a
-    per-pair codegen expression join.
+    The all-pairs arithmetic runs as cogrouped Arrow block products:
+    the corpus splits into MUTUAL_BLOCKS row-blocks
+    (``_cogroup_grid``), every block pair is one task running the
+    top-k emitter (``_block_topk_pdf``) over numpy array ops with the
+    JVM fold's exact IEEE sequence (``functions.vector.cosine_block``)
+    — 13.8x faster at sf1 (793.6 -> 57.6 s; 6.8 -> 4.2 s at sf0.1)
+    than a per-pair codegen expression join. The top-k window and
+    reciprocity join (``_mutual_knn``) are q203's too.
 
     Scale shape: block pairs are MUTUAL_BLOCKS^2 independent tasks
     (each side's shuffle carries MUTUAL_BLOCKS copies of the vectors);
@@ -786,31 +790,9 @@ def q166_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (candidate generation swaps, reciprocity layer is UNCHANGED),
     which is exactly how FAISS/ScaNN pipelines build mutual graphs;
     the blocked kernel here is then the in-bucket verifier."""
-    from pandamapreduce_spark.caching import scoped_persist
-
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    knn = scoped_persist(_knn_blocked(emb))  # both sides of the reciprocity join read it
-    rev = knn.select(
-        F.col("query_id").alias("r_query"),
-        F.col("neighbor_id").alias("r_neighbor"),
-        F.col("rank").alias("rank_ba"),
-    )
-    return (
-        knn.join(
-            rev,
-            (F.col("query_id") == F.col("r_neighbor"))
-            & (F.col("neighbor_id") == F.col("r_query")),
-        )
-        .where(F.col("query_id") < F.col("neighbor_id"))
-        .select(
-            F.col("query_id").alias("vec_a"),
-            F.col("neighbor_id").alias("vec_b"),
-            F.col("rank").alias("rank_ab"),
-            "rank_ba",
-            "cos_sim",
-        )
-        .orderBy("vec_a", "vec_b")
-    )
+    cands = _cogroup_grid(emb, _block_topk_pdf, _KNN_SCHEMA, MUTUAL_BLOCKS)
+    return _mutual_knn(cands).orderBy("vec_a", "vec_b")
 
 
 # --- q171: ANN recall@k evaluation -----------------------------------------
@@ -1029,6 +1011,41 @@ def _probe_masks(n_planes: int, radius: int) -> list[int]:
     return masks
 
 
+def _probe_array(n_planes: int, radius: int) -> F.Column:
+    """The probe buckets of a row's ``bucket`` column, in
+    ``_probe_masks`` order: own bucket first (xor 0), then every
+    bucket within the Hamming radius. q74 (radius 1) explodes it on
+    the query side; q203/q210 in ``_probe_cogroup``."""
+    return F.array(*[F.col("bucket").bitwiseXOR(F.lit(m)) for m in _probe_masks(n_planes, radius)])
+
+
+def _probe_cogroup(emb: DataFrame, emit, schema: str, delta: F.Column | None = None) -> DataFrame:
+    """Sign-LSH blocking shared by q203 and q210: every probe row
+    explodes to the buckets within SEMDEDUP_RADIUS of its own
+    (SEMDEDUP_PLANES planes), the base stores each row in exactly ONE
+    bucket, and each probe bucket is one cogrouped
+    ``applyInPandas(emit)`` task — left side the rows probing it,
+    right side the base rows stored in it — so a probe row's
+    candidates are disjoint across its buckets. Without ``delta``
+    every row is both probe and base (q203); with it the rows where
+    ``delta`` holds probe the rest (q210's delta-vs-base)."""
+    from pandamapreduce_spark.lineage import detach
+
+    b = emb.select(
+        "vec_id", "embedding", _bucket_col("embedding", SEMDEDUP_PLANES).alias("bucket")
+    )
+    probes = (b if delta is None else b.where(delta)).select(
+        "vec_id",
+        "embedding",
+        F.explode(_probe_array(SEMDEDUP_PLANES, SEMDEDUP_RADIUS)).alias("probe"),
+    )
+    # detach: probe and base sides both derive from `b` — a
+    # self-cogroup (lineage.detach; count()-shaped downstream plans
+    # otherwise prune the base side's payload columns).
+    base = detach(b) if delta is None else detach(b).where(~delta)
+    return probes.groupBy("probe").cogroup(base.groupBy("bucket")).applyInPandas(emit, schema=schema)
+
+
 def _semdedup_bucketed_mutual_sql() -> str:
     """Oracle for the BUCKETED directed-kNN + reciprocity frame: the
     q74 multi-probe candidate generator generalized to radius
@@ -1211,56 +1228,15 @@ def _mutual_knn_bucketed(emb: DataFrame) -> DataFrame:
     lanes the probe side here is the WHOLE corpus, so nothing
     broadcasts — both sides shuffle once on the bucket key.
 
-    Each probe bucket runs as ONE cogrouped Arrow task — left side the
-    queries probing that bucket, right side the corpus vectors stored
-    in it, kernel shared with q166 (`_block_topk_pdf`, same IEEE fold)
-    — and probe candidates are disjoint across a query's buckets, so
-    the final per-query window over per-bucket top-ks is exact. A
-    per-pair codegen probe join measured 18.3 s at sf0.1 (PERF.md)."""
-    b = emb.select(
-        "vec_id", "embedding", _bucket_col("embedding", SEMDEDUP_PLANES).alias("bucket")
-    )
-    probe_arr = F.array(
-        *[
-            F.col("bucket").bitwiseXOR(F.lit(m))
-            for m in _probe_masks(SEMDEDUP_PLANES, SEMDEDUP_RADIUS)
-        ]
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    from pandamapreduce_spark.caching import scoped_persist
-    from pandamapreduce_spark.lineage import detach
-
-    q = b.select("vec_id", "embedding", F.explode(probe_arr).alias("probe"))
-    # detach: probe and corpus sides both derive from `b` — a
-    # self-cogroup (lineage.detach; count()-shaped downstream plans
-    # otherwise prune the corpus side's payload columns).
-    cands = q.groupBy("probe").cogroup(detach(b).groupBy("bucket")).applyInPandas(
-        lambda left, right: _block_topk_pdf(left, right),
-        schema="query_id long, neighbor_id long, cos_sim double",
-    )
-    knn = cands.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= MUTUAL_K)
-
-    knn = scoped_persist(knn)  # both sides of the reciprocity join read it
-    rev = knn.select(
-        F.col("query_id").alias("r_query"),
-        F.col("neighbor_id").alias("r_neighbor"),
-        F.col("rank").alias("rank_ba"),
-    )
-    return (
-        knn.join(
-            rev,
-            (F.col("query_id") == F.col("r_neighbor"))
-            & (F.col("neighbor_id") == F.col("r_query")),
-        )
-        .where(F.col("query_id") < F.col("neighbor_id"))
-        .select(
-            F.col("query_id").alias("vec_a"),
-            F.col("neighbor_id").alias("vec_b"),
-            F.col("rank").alias("rank_ab"),
-            "rank_ba",
-            "cos_sim",
-        )
-    )
+    Each probe bucket runs as ONE cogrouped Arrow task
+    (``_probe_cogroup``, q210's blocking too) — left side the queries
+    probing that bucket, right side the corpus vectors stored in it,
+    q166's top-k emitter (``_block_topk_pdf``) inside — and probe
+    candidates are disjoint across a query's buckets, so q166's
+    per-query window and reciprocity join (``_mutual_knn``) over the
+    per-bucket top-ks are exact. A per-pair codegen probe join
+    measured 18.3 s at sf0.1 (PERF.md)."""
+    return _mutual_knn(_probe_cogroup(emb, _block_topk_pdf, _KNN_SCHEMA))
 
 
 @query(
@@ -1401,35 +1377,20 @@ def _incremental_sem_pairs(emb: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFra
     the planted-geometry recall pytest can feed a production-τ frame
     (the driver fixtures are near-isotropic; τ=0.40 keeps the lane
     non-vacuous there but the recall claim is measured at τ=0.95)."""
-    from pandamapreduce_spark.lineage import detach
     from pandamapreduce_spark.plans.dedup import DELTA_MOD, _emb_pairs_pdf
 
-    b = emb.select(
-        "vec_id", "embedding", _bucket_col("embedding", SEMDEDUP_PLANES).alias("bucket")
-    )
     # vec_id % DELTA_MOD assumes non-negative ids (see _ORACLE_KNN_SHARDS note)
     is_delta = F.col("vec_id") % F.lit(DELTA_MOD) == F.lit(DELTA_MOD - 1)
-    probe_arr = F.array(
-        *[
-            F.col("bucket").bitwiseXOR(F.lit(m))
-            for m in _probe_masks(SEMDEDUP_PLANES, SEMDEDUP_RADIUS)
-        ]
-    )
-    delta = b.where(is_delta).select("vec_id", "embedding", F.explode(probe_arr).alias("probe"))
-    # detach: delta and base both derive from `b` — a self-cogroup
-    # (lineage.detach). The BASE side is never joined to itself: the
-    # only pairing in the whole plan is this delta-probe × base-bucket
-    # cogroup (the no-base-self-join pytest asserts zero Join nodes).
-    base = detach(b).where(~is_delta)
-    pairs = (
-        delta.groupBy("probe")
-        .cogroup(base.groupBy("bucket"))
-        .applyInPandas(
-            lambda left, right: _emb_pairs_pdf(left, right, tau=tau, ordered=False).rename(
-                columns={"vec_a": "delta_id", "vec_b": "base_id"}
-            ),
-            schema="delta_id long, base_id long, cos_sim double",
-        )
+    # The BASE side is never joined to itself: the only pairing in the
+    # whole plan is the delta-probe x base-bucket cogroup (the
+    # no-base-self-join pytest asserts zero Join nodes).
+    pairs = _probe_cogroup(
+        emb,
+        lambda left, right: _emb_pairs_pdf(left, right, tau=tau, ordered=False).rename(
+            columns={"vec_a": "delta_id", "vec_b": "base_id"}
+        ),
+        "delta_id long, base_id long, cos_sim double",
+        delta=is_delta,
     )
     return pairs.orderBy("delta_id", "base_id")
 
@@ -1456,9 +1417,11 @@ def q210_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     disappears entirely and each increment reads only matched buckets
     (partition pruning on the bucket key). Candidates are disjoint by
     construction (a base vector lives in exactly one bucket), so no
-    dedup step. Per-bucket work is the q35/q166 Arrow kernel's
-    bitwise-IEEE cross-cosine matrix (`_emb_pairs_pdf`,
-    ordered=False), so emitted values match DuckDB bit-for-bit.
+    dedup step. Blocking is q203's probe cogroup (``_probe_cogroup``)
+    with the delta as the probe side; per-bucket work is q35's
+    threshold emitter (``_emb_pairs_pdf``, ordered=False) over the
+    shared bitwise cosine block, so emitted values match DuckDB
+    bit-for-bit.
 
     Recall: identical pricing to q203 (a delta-base τ-pair is missed
     iff their buckets differ on > {SEMDEDUP_RADIUS} hyperplanes):

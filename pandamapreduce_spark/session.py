@@ -51,7 +51,12 @@ def get_spark(app_name: str = "pandamapreduce_spark", shuffle_partitions: int | 
         .config("spark.ui.enabled", "false")
     )
     if not os.environ.get("SPARK_MASTER_URL"):
-        builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # Default heap: half the host's RAM, at most 48g. A heap above
+        # physical memory lets the JVM grow past what the host has (it
+        # expands rather than collects) until the kernel OOM-kills it.
+        ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(48, max(1, ram_gb // 2))}g")
+        builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", heap)
         # Local mode only: shuffle/spill files on tmpfs so single-node
         # benchmarks measure the engine, not /tmp disk flush stalls. On
         # a real cluster spark.local.dir comes from the deployment

@@ -87,6 +87,38 @@ def test_mapreduce_job_range_partitioner_sorted(spark):
     assert len(flat) == 500
 
 
+def test_mapreduce_job_combiner_honoured_under_range(spark):
+    """A combiner that reshapes values (v -> (sum, n), folded by the
+    reducer) must run under the range partitioner exactly as under
+    hash: same per-key means either way."""
+    pairs = [(f"k{i % 13:02d}", float(i)) for i in range(400)]
+
+    def map_f(k, v):
+        yield k, v
+
+    def partial_f(_k, vals):
+        return sum(vals), len(vals)
+
+    def mean_f(_k, partials):
+        return sum(s for s, _ in partials) / sum(n for _, n in partials)
+
+    def run(partitioner):
+        job = (
+            MapReduceJob(spark)
+            .set_map(map_f)
+            .set_combiner(partial_f)
+            .set_reduce(mean_f)
+            .set_num_reducers(4)
+            .set_partitioner(partitioner)
+            .add_input(pairs, num_partitions=5)
+        )
+        return sorted(job.execute().collect())
+
+    hashed = run("hash")
+    assert len(hashed) == 13
+    assert run("range") == hashed
+
+
 def test_tera_file_roundtrip(spark):
     """teragen → raw 100-byte file sink → fixed-width reader → identical."""
     e = Engine(spark)

@@ -6,14 +6,15 @@
    is pinned on planted geometry at a NON-default tau so the tau
    plumbing itself is exercised (the parquet fixtures emit zero >= 0.93
    pairs — vacuous).
-2. The `_emb_pairs_pdf` zero-norm guard now matches the JVM cosine()
+2. The shared cosine block's zero-norm guard matches the JVM cosine()
    bit-for-bit ((na>0)&(nb>0), ADVICE r9) — pinned with an explicit
-   zero vector.
+   zero vector through both emitters.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from tests.conftest import duckdb_rows
 from tests.test_round9 import planted_embeddings, planted_frame
@@ -124,22 +125,34 @@ def test_q210_recall_floor_on_planted_production_tau(spark):
     assert recall >= 0.90, f"delta-vs-base recall {recall:.3f} below floor"
 
 
-def test_emb_pairs_zero_norm_guard_matches_hof(spark):
-    """An all-zero embedding must emit cosine 0.0 (never NaN/inf) from
-    the blocked kernel, exactly as the JVM cosine() guard (na>0)&(nb>0) does —
-    and pairing a zero vector with a near-dup cohort must not emit a
-    pair at any tau > 0."""
-    import pandas as pd
-
+def _threshold_emit(a, b):
     from pandamapreduce_spark.plans.dedup import _emb_pairs_pdf
+
+    out = _emb_pairs_pdf(a, b, tau=-1.0)  # tau=-1 keeps even cos=0 rows
+    return {(r.vec_a, r.vec_b): r.cos_sim for r in out.itertuples(index=False)}
+
+
+def _topk_emit(a, b):
+    from pandamapreduce_spark.plans.similarity import _block_topk_pdf
+
+    out = _block_topk_pdf(a, b)
+    return {(r.query_id, r.neighbor_id): r.cos_sim for r in out.itertuples(index=False)}
+
+
+@pytest.mark.parametrize("emit", [_threshold_emit, _topk_emit], ids=["threshold", "topk"])
+def test_emb_pairs_zero_norm_guard_matches_hof(spark, emit):
+    """An all-zero embedding must emit cosine 0.0 (never NaN/inf) from
+    both emitters over the shared cosine block (q35's threshold
+    emitter, q166's top-k emitter), exactly as the JVM cosine() guard
+    (na>0)&(nb>0) does; neither emits a self-pair."""
+    import pandas as pd
 
     a = pd.DataFrame(
         {"vec_id": [1, 2], "embedding": [np.zeros(4, dtype=np.float32), np.ones(4, dtype=np.float32)]}
     )
-    out = _emb_pairs_pdf(a, a, tau=-1.0)  # tau=-1 keeps even cos=0 rows
-    got = {(r.vec_a, r.vec_b): r.cos_sim for r in out.itertuples(index=False)}
+    got = emit(a, a)
     assert got[(1, 2)] == 0.0  # zero-norm pair: guarded to 0.0, not NaN
-    assert (2, 2) not in got and (1, 1) not in got  # left<right filter
+    assert (2, 2) not in got and (1, 1) not in got  # no self-pairs
 
 
 def test_basket_pair_explode_equals_self_join(spark):
