@@ -46,6 +46,10 @@ _WINDOW_OVERRIDE: list[str] = [
     "q96_vocab_build",
     "q141_pps_sample",
     "q208_bpe_pack",
+    "q169_khop_reach",
+    "q180_shortest_path",
+    "q204_bpe_merges",
+    "q206_bpe_encode",
     "q131_copurchase",
     "q136_triangle_count",
     "q184_communities",

@@ -70,16 +70,27 @@ def _load_bench_record(path: str) -> dict:
     m = re.search(r'"sf": ([0-9.]+)', tail)
     if m:
         out["sf"] = float(m.group(1)) if "." in m.group(1) else int(m.group(1))
+    m = re.search(r'"cpus": ([0-9]+)', tail)
+    if m:
+        out["cpus"] = int(m.group(1))
     return out
 
 
-def _best_bench_value(key: str, sf) -> float | None:
-    """The BEST recorded value for ``key`` across every round AT THE
-    SAME SCALE FACTOR — the known capability of this code on a quiet
-    host. Used as the host-noise retry threshold: a round that records
-    5× the best-ever number is measuring the co-tenants, not the
-    engine. Rounds run at a different sf (e.g. the sf1 scaling study)
-    must not compare against sf0.1 history."""
+def _same_host_scale(rec: dict, sf, cpus) -> bool:
+    """Whether ``rec`` was recorded at scale factor ``sf`` on ``cpus``
+    cores. Records from before the ``cpus`` key existed carry None and
+    match only ``cpus=None``: their core count is unknown."""
+    return rec.get("sf") == sf and rec.get("cpus") == cpus
+
+
+def _best_bench_value(key: str, sf, cpus=None) -> float | None:
+    """The BEST recorded value for ``key`` across every round at the
+    same scale factor AND core count — the known capability of this
+    code on a quiet host. Used as the host-noise retry threshold: a
+    round that records 5× the best-ever number is measuring the
+    co-tenants, not the engine. Rounds run at a different sf (e.g. the
+    sf1 scaling study) or on a different core count must not set the
+    threshold."""
     here = os.path.dirname(os.path.abspath(__file__))
     vals = []
     # Union of driver records and sidecar-only rounds (a sidecar with
@@ -90,7 +101,7 @@ def _best_bench_value(key: str, sf) -> float | None:
         rounds.setdefault(name, os.path.join(here, name))
     for f in rounds.values():
         parsed = _load_bench_record(f)
-        if parsed.get("sf") != sf:
+        if not _same_host_scale(parsed, sf, cpus):
             continue
         v = parsed.get("queries", {}).get(key)
         if v:
@@ -103,9 +114,10 @@ def _merge_sidecar(prev: dict, payload: dict) -> dict:
     `value` = sum of kept timings; labeled when anything merged.
     Best-demonstrated is the right history feed for the noise guard
     on a host that swings 2-8x with co-tenant steal."""
-    if prev.get("sf") != payload.get("sf"):
-        # never min-merge timings taken at different scale factors
-        # (e.g. an sf1 scaling study sharing a round with sf0.1 runs);
+    if not _same_host_scale(prev, payload.get("sf"), payload.get("cpus")):
+        # never min-merge timings taken at different scale factors or
+        # core counts (e.g. an sf1 scaling study sharing a round with
+        # sf0.1 runs, or a 4-core run in an 8-core round);
         # KEEP the existing record — overwriting it would destroy the
         # round's best-of history for the other scale, which is the
         # history feed future rounds' noise guards read
@@ -213,6 +225,7 @@ def main() -> None:
     # machine-attributable to the host instead of judged by eyeball.
     run_t0, run_s0 = _stat_sample()
     spark = get_spark("pandamapreduce-bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     bench_queries = {name: q for name, q in REGISTRY.items() if q.bench}
     # Subset re-record (round 9): SPARK_GRAFT_BENCH_ONLY=key1,key2
@@ -263,7 +276,7 @@ def main() -> None:
 
         for _ in range(2):
             runs.append(one_query_run())
-        best_known = _best_bench_value(name, sf_val)
+        best_known = _best_bench_value(name, sf_val, cpus)
         extra = 0
         while best_known and min(runs) > 2 * best_known and extra < 2:
             extra += 1
@@ -347,7 +360,7 @@ def main() -> None:
         # swings this host 3-8×): while the best run still exceeds 2×
         # the best-ever recorded value, grant up to two extra attempts
         # so BENCH doesn't pin a noise spike as the round's number.
-        best_known = _best_bench_value(key, sf_val)
+        best_known = _best_bench_value(key, sf_val, cpus)
         extra = 0
         while all_valid and best_known and min(runs) > 2 * best_known and extra < 2:
             extra += 1
@@ -375,7 +388,8 @@ def main() -> None:
     prev_files = sorted(glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")))
     if prev_files:
         try:
-            prev = _load_bench_record(prev_files[-1]).get("queries", {})
+            rec = _load_bench_record(prev_files[-1])
+            prev = rec.get("queries", {}) if _same_host_scale(rec, sf_val, cpus) else {}
             for name, sec in timings.items():
                 if name in prev and prev[name]:
                     deltas[name] = round(sec / prev[name], 2)
@@ -399,6 +413,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
+        "cpus": cpus,
         "hsph_at_sf": hsph,
         "deltas_vs_prev": deltas,
         "run_steal": run_steal,
@@ -441,7 +456,7 @@ def main() -> None:
                 sided = _merge_sidecar(prev, payload)
             except Exception:
                 prev = None  # unreadable previous sidecar — record this run
-        sf_mismatch = sided is prev  # _merge_sidecar kept prev verbatim
+        sf_mismatch = sided is prev  # _merge_sidecar kept prev verbatim (sf or cpus)
         if sided is not payload and not sf_mismatch:
             # VERDICT r6 wrong#3: the merge and BASELINE.md's worse-of-2
             # protocol are different quantities — keep BOTH derivable by
@@ -454,10 +469,10 @@ def main() -> None:
             # ADVICE r7: the drop must be observable — announce it and
             # park the discarded payload in an sf-suffixed sidecar so a
             # scaling-study run at another sf still leaves a trace.
-            alt = side[:-5] + f"_sf{payload.get('sf')}.json"
+            alt = side[:-5] + f"_sf{payload.get('sf')}_c{cpus}.json"
             print(
-                f"# sidecar sf mismatch (prev sf={prev.get('sf')}, "
-                f"run sf={payload.get('sf')}): kept previous sidecar; "
+                f"# sidecar sf/cpus mismatch (prev sf={prev.get('sf')} cpus={prev.get('cpus')}, "
+                f"run sf={payload.get('sf')} cpus={cpus}): kept previous sidecar; "
                 f"this run recorded at {alt}",
                 file=sys.stderr,
             )

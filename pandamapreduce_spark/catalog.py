@@ -34,13 +34,6 @@ TABLES = (
 #: use this to hint broadcast.
 BROADCAST_TABLES = ("region", "nation", "supplier")
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     """Load one table. ``spread=True`` repartitions to the cluster's
     parallelism — use for CPU-heavy per-row operators (hashing,

@@ -63,13 +63,3 @@ def davg(col: Column | str, scale: int = 6) -> Column:
 def davg_sql(expr: str, scale: int = 6) -> str:
     num = f"cast(round(sum(cast(({expr}) as {DEC})), {scale}) as double)"
     return f"({num} / cast(count({expr}) as double))"
-
-
-def dround(col: Column | str, scale: int = 6) -> Column:
-    """Round a per-row double through decimal (exact, both engines)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(c.cast(DEC), scale).cast("double")
-
-
-def dround_sql(expr: str, scale: int = 6) -> str:
-    return f"cast(round(cast(({expr}) as {DEC}), {scale}) as double)"

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pandamapreduce_spark.caching import release_one, scoped_checkpoint, scoped_persist
+from pandamapreduce_spark.caching import iterate, scoped_persist
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.functions import hex16, tokens, tokens_sql
 from pandamapreduce_spark.operators.prefix import range_prefix
@@ -527,16 +527,11 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     not converged after ``max_iters`` rounds raises ``RuntimeError``
     rather than returning partial labels.
 
-    Convergence is checked with a count (never a collect). Per-round
-    state is cut over with an EAGER ``localCheckpoint``, not a bare
-    persist: persist truncates re-EXECUTION but not the logical plan,
-    so Catalyst re-analyzes a plan that doubles every round and
-    analysis time itself goes exponential past ~10 iterations
-    (measured: 1.2 s/round at iter 2 → 9.5 s at iter 5 on an 18-row
-    chain). Checkpointing resets the lineage to the materialized
-    result each round — constant per-round cost. On a cluster the same
-    cutover is ``checkpoint()`` to the reliable store; local mode uses
-    the executor-local variant."""
+    Rounds run through ``caching.iterate``: each round's labels are cut
+    over with an eager ``localCheckpoint`` (constant per-round analysis
+    cost, where a persisted plan would double every round), the
+    superseded round is released, and convergence is a count of
+    changed labels (never a collect)."""
     # Round shape (guide §2.4 — fewer exchanges per round):
     #
     # - union+agg instead of join+agg+left-join: every node already has
@@ -563,28 +558,24 @@ def connected_components(edges: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
         e.select(F.col("doc_a").alias("doc_id")).distinct().withColumn("label", F.col("doc_id"))
     )
     null_lbl = F.lit(None).cast(labels.schema["label"].dataType)
-    held = labels  # the registered cache backing ``labels`` (release target)
-    for _ in range(max_iters):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         own = labels.select("doc_id", "label", F.col("label").alias("old"))
         nbr = (
             e.join(labels, e["doc_b"] == labels["doc_id"])
             .select(F.col("doc_a").alias("doc_id"), "label", null_lbl.alias("old"))
         )
-        new_labels = scoped_checkpoint(
+        return (
             own.unionByName(nbr)
             .groupBy("doc_id")
             .agg(F.min("label").alias("label"), F.max("old").alias("old"))
         )
-        # old is non-null exactly once per node (the own row), so the
-        # changed count is a filter over the checkpointed frame — no
-        # old⋈new join.
-        changed = new_labels.where(F.col("label") != F.col("old")).count()
-        release_one(held)  # superseded round: last read was the count above
-        held = new_labels
-        labels = new_labels.select("doc_id", "label")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iters} rounds")
+
+    # old is non-null exactly once per node (the own row), so the
+    # changed count is a filter over the checkpointed frame — no
+    # old⋈new join.
+    changed = F.col("label") != F.col("old")
+    return iterate(labels, step, max_iters, changed).select("doc_id", "label")
 
 
 @query(
@@ -1862,25 +1853,21 @@ def _bpe_words(docs: DataFrame) -> DataFrame:
     )
 
 
-def _bpe_learn(
-    words: DataFrame, need_final: bool = False
-) -> tuple[list[tuple[int, str, str, int, str]], DataFrame]:
+def _bpe_learn(words: DataFrame) -> tuple[list[tuple[int, str, str, int, str]], DataFrame]:
     """The BPE_MERGES-round merge-learning loop over the (word, cnt)
-    type table (shared by q204 and q206). Returns the learned merge
-    list and the final wrapped-sequence state; the FINAL round's
-    ``replace`` is applied (and its state persisted) only under
-    ``need_final`` — q204 never reads the post-final-round state,
-    q206's encode is defined by it."""
-    cur = scoped_persist(
-        words.select("cnt", F.regexp_replace("word", "(.)", r"($1)").alias("seq"))
-    )
+    type table (shared by q204, q206 and q208). Returns the learned
+    merge list and the wrapped-sequence state after the last merge.
+    Rounds run through ``caching.iterate``: each round's state is
+    checkpointed, so a round reads the previous round's materialized
+    types instead of replaying every earlier ``replace`` from the base
+    (O(K^2) passes over the word-type table)."""
     syms = F.split(F.expr("trim(BOTH '()' FROM seq)"), r"\)\(")
     adj = F.expr(
         "transform(sequence(0, size(syms) - 2), i -> struct(syms[i] AS lhs, syms[i + 1] AS rhs))"
     )
     merges: list[tuple[int, str, str, int, str]] = []
-    prev: DataFrame | None = None
-    for k in range(1, BPE_MERGES + 1):
+
+    def step(cur: DataFrame, k: int) -> DataFrame:
         pairs = (
             cur.select("cnt", syms.alias("syms"))
             .where(F.size("syms") >= 2)  # sequence(0,-1) would DESCEND
@@ -1893,22 +1880,16 @@ def _bpe_learn(
             .limit(1)
             .collect()[0]
         )
-        if prev is not None:
-            # this round's collect just materialized cur's own cache,
-            # so the superseded round's blocks are no longer read —
-            # the q94 eager-release discipline; without per-round
-            # persistence each round would replay ALL prior replaces
-            # from the base (O(K^2) passes over the word-type table).
-            release_one(prev)
         lhs, rhs, c = best["lhs"], best["rhs"], int(best["c"])
         merges.append((k, lhs, rhs, c, lhs + rhs))
-        if k < BPE_MERGES or need_final:
-            prev, cur = cur, scoped_persist(
-                cur.withColumn(
-                    "seq", F.replace("seq", F.lit(f"({lhs})({rhs})"), F.lit(f"({lhs}{rhs})"))
-                )
-            )
-    return merges, cur
+        return cur.withColumn(
+            "seq", F.replace("seq", F.lit(f"({lhs})({rhs})"), F.lit(f"({lhs}{rhs})"))
+        )
+
+    cur = scoped_persist(
+        words.select("cnt", F.regexp_replace("word", "(.)", r"($1)").alias("seq"))
+    )
+    return merges, iterate(cur, step, BPE_MERGES)
 
 
 # --- q206: BPE encode with the learned merges -------------------------------
@@ -1980,7 +1961,7 @@ def q206_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned wrapped-representation argument as q204 (tests/test_bpe.py
     covers the encode path against a from-scratch Python encoder)."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    _, final = _bpe_learn(_bpe_words(docs), need_final=True)
+    _, final = _bpe_learn(_bpe_words(docs))
     return (
         _bpe_doc_words(docs)
         .join(_bpe_enc_table(final), "word")
@@ -2081,7 +2062,7 @@ def q208_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME chained-CTE learn/encode chain plus a window-based prefix
     — parity proves the distributed prefix rewrite."""
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    _, final = _bpe_learn(_bpe_words(docs), need_final=True)
+    _, final = _bpe_learn(_bpe_words(docs))
     per = (
         _bpe_doc_words(docs)
         .join(_bpe_enc_table(final), "word")

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pandamapreduce_spark.caching import scoped_persist
+from pandamapreduce_spark.caching import iterate, scoped_persist
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.plans.registry import query
 
@@ -114,7 +114,8 @@ def q129_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's iterative_support driver loop (SURVEY §2.2 A7) re-runs
     a map-reduce per iteration over persisted input; here the loop body
     is one join + one aggregation per iteration over a persisted edge
-    DataFrame, and Catalyst plans each step.
+    DataFrame, and ``caching.iterate`` checkpoints each round's ranks,
+    so Catalyst plans one round at a time.
 
     Scale shape: the EXPENSIVE part is the one-time edge derivation —
     a fact-table join against three dimensions aggregated down to the
@@ -143,17 +144,8 @@ def q129_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("w"))
     )
-    # r11 (guide §2.4): the aggregated graph is O(nations²) rows —
-    # persist it WITH the out-weight fractions so the window isn't
-    # re-planned/re-run inside every iteration's inflow join (the
-    # before-plan re-derived it 3×). Explicit F.broadcast hints on the
-    # ≤25-row rank/dangling/degree frames were ALSO measured (static
-    # plan: 38 SMJ → 0) and dropped again: each hint is an eager
-    # driver-side broadcast build, ~12 of them per run, and the cold
-    # bench A/B showed old 2.9-3.8 s / broadcast-hinted 3.8 s /
-    # persist-only 2.7-3.6 s — AQE already converts these joins to
-    # broadcast at runtime from observed ≤25-row sizes, without the
-    # serial build cost.
+    # persisted with the out-weight fractions so no round re-runs the window;
+    # no broadcast hints: AQE broadcasts the ≤25-row frames without a driver build
     edges = scoped_persist(
         weights.withColumn(
             "frac",
@@ -169,8 +161,7 @@ def q129_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     def dec_sum(col: F.Column) -> F.Column:
         return F.round(F.sum(col.cast(PR_DEC)), PR_SCALE).cast("double")
 
-    ranks = nodes.select("nk", (F.lit(1).cast("double") / nn).alias("r"))
-    for _ in range(PR_ITERS):
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         dang = (
             ranks.join(srcs, ranks.nk == srcs.src, "left_anti")
             .agg(F.coalesce(dec_sum(F.col("r")), F.lit(0).cast("double")).alias("dang"))
@@ -180,7 +171,7 @@ def q129_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("nk"))
             .agg(dec_sum(F.col("r") * F.col("frac")).alias("inflow"))
         )
-        ranks = (
+        return (
             nodes.select("nk")
             .join(inflow, "nk", "left")
             .crossJoin(F.broadcast(dang))
@@ -202,6 +193,7 @@ def q129_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
+    ranks = iterate(nodes.select("nk", (F.lit(1).cast("double") / nn).alias("r")), step, PR_ITERS)
     out_w = weights.groupBy("src").agg(F.sum("w").cast("bigint").alias("out_w"))
     in_w = weights.groupBy("dst").agg(F.sum("w").cast("bigint").alias("in_w"))
     return (
@@ -1490,39 +1482,36 @@ def q169_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join of the CURRENT frontier against the edge list on the
     source vertex plus an anti-join against the visited set — shuffle
     volume is O(frontier x avg-degree) integer ids per round, never
-    adjacency materialization. Frontiers/visited stay distributed
-    (no driver collect); at 100 TB the same plan is GraphFrames' BFS
-    shape: iterate k times, each a keyed join, AQE-broadcast when the
-    frontier is small."""
+    adjacency materialization. The loop state is the visited set alone
+    (the frontier is its rows labelled in the previous round); it stays
+    distributed (no driver collect) and ``caching.iterate`` checkpoints
+    it each round and releases the round before, so lineage and pinned
+    blocks stay one round deep. At 100 TB the same plan is GraphFrames'
+    BFS shape: iterate k times, each a keyed join, AQE-broadcast when
+    the frontier is small."""
     pairs = _basket_pairs(spark, sf_dir, KHOP_SUPPORT).select("a", "b")
     edges = scoped_persist(pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))))
 
     part = load_table(spark, sf_dir, "part")
     seed_brand = part.agg(F.min("p_brand").alias("sb"))
-    frontier = scoped_persist(
+    seeds = scoped_persist(
         part.join(F.broadcast(seed_brand), part["p_brand"] == F.col("sb"))
         .select(F.col("p_partkey").alias("pk"))
         .withColumn("hops", F.lit(0))
     )
-    visited = frontier  # (pk, hops): min-hop label per reached vertex
-    # r11 NOTE (measured, kept as-is): an explicit-broadcast variant
-    # (frontier∩nodes / visited∩nodes broadcast into every hop's
-    # expansion and anti joins) was implemented and A/B'd in one warm
-    # session at sf0.1 — it was SLOWER (6.4-7.9 s vs 4.4-4.9 s): each
-    # per-hop broadcast is an extra serial driver collect+build job,
-    # while this shape lets AQE broadcast the small side at runtime
-    # where it pays (the executed plan already shows BHJ hops). The
-    # loop is overhead-bound at sf0.1, not shuffle-bound.
-    for h in range(1, KHOP_MAX + 1):
+
+    # no explicit broadcast: a per-hop driver build measured slower at sf0.1 than AQE's own
+    def step(visited: DataFrame, h: int) -> DataFrame:
+        frontier = visited.where(F.col("hops") == h - 1).select("pk")  # reached last round
         reached = (
-            edges.join(frontier.select("pk"), edges["a"] == F.col("pk"))
+            edges.join(frontier, edges["a"] == F.col("pk"))
             .select(F.col("b").alias("pk"))
             .distinct()
         )
-        frontier = scoped_persist(
-            reached.join(visited.select("pk"), "pk", "left_anti").withColumn("hops", F.lit(h))
-        )
-        visited = scoped_persist(visited.union(frontier))
+        new = reached.join(visited.select("pk"), "pk", "left_anti").withColumn("hops", F.lit(h))
+        return visited.union(new)
+
+    visited = iterate(seeds, step, KHOP_MAX)
     return visited.select(
         F.col("pk").cast("bigint").alias("p_partkey"), F.col("hops").cast("int").alias("hops")
     ).orderBy("p_partkey")
@@ -1598,9 +1587,10 @@ def q180_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance frontier against the edge list plus a (pk, min) partial
     agg — min-plus matrix-vector in the tropical semiring, shuffling
     only (pk, dist) pairs; the edge derivation reuses q131's capped
-    self-join. At 100 TB: identical to a Pregel superstep — and the
-    support cap keeps degree bounded, so a round is O(frontier x
-    avg-degree)."""
+    self-join. Rounds run through ``caching.iterate``: each distance
+    frame is checkpointed and the one it supersedes released. At
+    100 TB: identical to a Pregel superstep — and the support cap keeps
+    degree bounded, so a round is O(frontier x avg-degree)."""
     pairs = _basket_pairs(spark, sf_dir, KHOP_SUPPORT)
     mx = pairs.agg(F.max("n_ab").alias("m"))
     weighted = pairs.crossJoin(F.broadcast(mx)).select(
@@ -1616,14 +1606,15 @@ def q180_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p_partkey").alias("pk"))
         .withColumn("dist", F.lit(0).cast("bigint"))
     )
-    for _ in range(SP_ROUNDS):
+
+    def step(d: DataFrame, _: int) -> DataFrame:
         relaxed = (
             edges.join(d, edges["a"] == d["pk"])
             .select(F.col("b").alias("pk"), (F.col("dist") + F.col("w")).alias("dist"))
         )
-        d = scoped_persist(
-            d.select("pk", "dist").union(relaxed).groupBy("pk").agg(F.min("dist").alias("dist"))
-        )
+        return d.select("pk", "dist").union(relaxed).groupBy("pk").agg(F.min("dist").alias("dist"))
+
+    d = iterate(d, step, SP_ROUNDS)
     return d.select(
         F.col("pk").cast("bigint").alias("p_partkey"), F.col("dist").cast("bigint").alias("dist")
     ).orderBy("p_partkey")
@@ -1777,24 +1768,18 @@ def q184_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per round, one equi-join of the (node, label) frame
     against the edge list and one (node, label) count agg with a
     per-node top-1 window — shuffle volume O(edges) integer triples,
-    the textbook Pregel LPA superstep. Rounds cut over via eager
-    localCheckpoint with the superseded round released immediately
-    (q94's iteration hygiene); the support cap bounds degree, so skew
-    in the count agg is bounded by the same guard that bounds q131."""
-    from pandamapreduce_spark.caching import release_one, scoped_checkpoint
-
+    the textbook Pregel LPA superstep. Rounds run through
+    ``caching.iterate`` (eager localCheckpoint, superseded round
+    released at once); the support cap bounds degree, so skew in the
+    count agg is bounded by the same guard that bounds q131."""
     pairs = _basket_pairs(spark, sf_dir, KHOP_SUPPORT).select("a", "b")
     edges = scoped_persist(pairs.union(pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))))
     labels = edges.select(F.col("a").alias("pk")).distinct().withColumn("lbl", F.col("pk"))
     w = Window.partitionBy("a").orderBy(F.col("c").desc(), F.col("lbl"))
-    # r11 NOTE (measured, kept as-is): broadcasting the (pk, lbl) label
-    # frame into the superstep join was A/B'd warm at sf0.1 and LOST
-    # (3.4-4.1 s vs 2.8-4.0 s): inside an eager per-round loop every
-    # broadcast is an extra serial driver collect+build, the same
-    # finding as q169's hop loop. One-shot plans (q187) do win from
-    # explicit broadcasts; iterative rounds at this scale do not.
-    for _ in range(LPA_ROUNDS):
-        new_labels = scoped_checkpoint(
+
+    # no explicit broadcast: a per-round driver build measured slower at sf0.1 than AQE's own
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        return (
             edges.join(labels, edges["b"] == labels["pk"])
             .groupBy("a", "lbl")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -1802,8 +1787,8 @@ def q184_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("rn") == 1)
             .select(F.col("a").alias("pk"), "lbl")
         )
-        release_one(labels)  # checkpoint above is eager — prev round is dead
-        labels = new_labels
+
+    labels = iterate(labels, step, LPA_ROUNDS)
     return labels.select(
         F.col("pk").cast("bigint").alias("p_partkey"),
         F.col("lbl").cast("bigint").alias("community"),

@@ -87,3 +87,30 @@ def test_sidecar_merges_best_of_round(tmp_path):
     # record for the original scale — the existing sidecar is kept
     other_sf = dict(best, sf=1.0)
     assert bench._merge_sidecar(same_sf_prev, other_sf) is same_sf_prev
+
+
+def test_history_keyed_on_sf_and_cpus(tmp_path, monkeypatch):
+    """A run is compared only with runs at the same sf AND core count:
+    an 8-core best-ever must not set a 4-core run's retry threshold,
+    and a 4-core run must not min-merge into an 8-core sidecar (it
+    takes the sf-mismatch path and keeps the previous record)."""
+    for rnd, cpus, q01 in (("r01", 8, 1.0), ("r02", 4, 3.0), ("r03", None, 0.5)):
+        parsed = {"sf": 0.1, "queries": {"q01": q01}}
+        if cpus is not None:
+            parsed["cpus"] = cpus
+        (tmp_path / f"BENCH_{rnd}.json").write_text(json.dumps({"parsed": parsed}))
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert bench._best_bench_value("q01", 0.1, 4) == 3.0
+    assert bench._best_bench_value("q01", 0.1, 8) == 1.0
+    assert bench._best_bench_value("q01", 0.1, 2) is None
+    # a record without the key has an unknown core count
+    assert bench._best_bench_value("q01", 0.1) == 0.5
+
+    prev = {"sf": 0.1, "cpus": 8, "queries": {"q01": 1.0}, "hsph_at_sf": {}}
+    run = {"sf": 0.1, "cpus": 4, "queries": {"q01": 3.0}, "hsph_at_sf": {}}
+    assert bench._merge_sidecar(prev, run) is prev
+    # the recorded 8-core sidecars predate the key: kept, not merged
+    legacy = {k: v for k, v in prev.items() if k != "cpus"}
+    assert bench._merge_sidecar(legacy, run) is legacy
+    same = dict(run, queries={"q01": 2.0})
+    assert bench._merge_sidecar(dict(prev, cpus=4), same)["queries"] == {"q01": 1.0}

@@ -434,23 +434,28 @@ def test_column_stats_drive_join_cardinality_estimates(spark):
 
 
 def test_no_bare_persist_outside_caching():
-    # caching.py's contract (r6 verdict #5): every persist/cache/
-    # localCheckpoint in the engine goes through scoped_persist /
-    # scoped_checkpoint so release_caches can reclaim it. A bare call
-    # leaks blocks until session end (q171 shipped one in r6).
+    # caching.py's contract: every persist/cache/localCheckpoint in the
+    # engine goes through scoped_persist or caching.iterate so
+    # release_caches can reclaim it. A bare call leaks blocks until
+    # session end (q171 once shipped one). Plans never hand-roll a
+    # loop's checkpoint/release either: their loops go through iterate.
     import pathlib
     import re
 
     root = pathlib.Path(__file__).resolve().parents[1] / "pandamapreduce_spark"
     pat = re.compile(r"\.(persist|cache|localCheckpoint)\(")
+    loop_pat = re.compile(r"\b(scoped_checkpoint|release_one)\b")
     offenders = []
     for p in sorted(root.rglob("*.py")):
         if p.name == "caching.py":
             continue
+        in_plans = p.parent.name == "plans"
         for i, line in enumerate(p.read_text().splitlines(), 1):
-            if pat.search(line) and not line.lstrip().startswith("#"):
+            if line.lstrip().startswith("#"):
+                continue
+            if pat.search(line) or (in_plans and loop_pat.search(line)):
                 offenders.append(f"{p.relative_to(root)}:{i}: {line.strip()}")
-    assert not offenders, f"bare persist/cache outside caching.py: {offenders}"
+    assert not offenders, f"bare persist/cache or hand-rolled loop cut-over: {offenders}"
 
 
 def test_delay_seconds_contract_sub_millisecond(spark, oracle):
