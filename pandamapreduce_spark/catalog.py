@@ -7,13 +7,24 @@ lineitem events documents embeddings — one parquet file each under
 At 100 TB these would be partitioned/bucketed parquet datasets; the
 loader is path-based so the same code reads a directory tree. Parquet
 scans get predicate pushdown + column pruning from Catalyst for free.
+
+A schema-less ``spark.read.parquet`` runs a one-task Spark job to read
+the file footer, on every call. ``load_table`` therefore remembers the
+schema it inferred for each regular file, keyed on the absolute path
+and valid while the file's ``(st_mtime_ns, st_size)`` stay the same;
+later loads pass that schema to the reader and run no job. A rewritten
+file gets a new stamp and is inferred again. Directories are never
+memoized: a directory's mtime does not change when a file inside it is
+rewritten.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,11 +39,27 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at ANY scale factor —
-#: region/nation are fixed-size in TPC-H; supplier/part/customer grow
-#: with SF but stay broadcastable until very large SF. Join helpers
-#: use this to hint broadcast.
-BROADCAST_TABLES = ("region", "nation", "supplier")
+#: absolute path → (st_mtime_ns, st_size, schema inferred at that stamp)
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the inferred schema memoized
+    for a regular local file (see the module docstring)."""
+    try:
+        st = os.stat(path)
+    except OSError:  # a cluster URI, or missing: Spark resolves or reports it
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = os.path.abspath(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[:2] == (st.st_mtime_ns, st.st_size):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (st.st_mtime_ns, st.st_size, df.schema)
+    return df
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False) -> DataFrame:
     """Load one table. ``spread=True`` repartitions to the cluster's
@@ -41,6 +68,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
     a single small parquet file otherwise pins the whole computation to
     one core. At real scale inputs arrive pre-split and the repartition
     collapses to a cheap exchange of already-distributed data.
+
+    The first load of a file infers its schema with a one-task Spark
+    job; later loads of the same unchanged file reuse that schema and
+    run no job. The memo is keyed on the file's absolute path, valid
+    while its ``(st_mtime_ns, st_size)`` match; a directory path is
+    read without the memo every time.
     """
     if name == "events":
         # defensive: the caller's session may not have been built by
@@ -50,7 +83,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if spread:
         df = df.repartition(spark.sparkContext.defaultParallelism * 2)
     if name == "events":

@@ -221,13 +221,12 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "star"),
 )
 def q05_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale: nation (25 rows, fixed at any SF — in BROADCAST_TABLES)
-    keeps an explicit broadcast hint; customer GROWS with SF so it gets
-    no hint — under the threshold Catalyst/AQE broadcast it anyway
-    (plan test asserts it at test SF), and beyond the threshold they
-    fall back to a shuffle join on custkey instead of a forced-
-    broadcast OOM. The only unavoidable shuffle is lineitem⋈orders on
-    orderkey."""
+    """Scale: nation (25 rows, fixed-size at any SF) keeps an explicit
+    broadcast hint; customer GROWS with SF so it gets no hint — under
+    the threshold Catalyst/AQE broadcast it anyway (plan test asserts
+    it at test SF), and beyond the threshold they fall back to a
+    shuffle join on custkey instead of a forced-broadcast OOM. The
+    only unavoidable shuffle is lineitem⋈orders on orderkey."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))

@@ -49,6 +49,12 @@ def get_spark(app_name: str = "pandamapreduce_spark", shuffle_partitions: int | 
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
+        # PySpark wraps every Column/function call to record its Python
+        # call site: four py4j round trips per call, two thirds of the
+        # driver's calls while a plan is built. It only adds file:line
+        # under "== DataFrame ==" in error messages; the error class and
+        # message stay. Read once per process, so it must be set here.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if not os.environ.get("SPARK_MASTER_URL"):
         # Default heap: half the host's RAM, at most 48g. A heap above

@@ -458,6 +458,24 @@ def test_no_bare_persist_outside_caching():
     assert not offenders, f"bare persist/cache or hand-rolled loop cut-over: {offenders}"
 
 
+def test_plans_read_tables_through_catalog():
+    # Every registry query reads its inputs through catalog.load_table,
+    # which remembers each file's schema: a direct read under plans/
+    # would run a schema-inference Spark job on every build.
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1] / "pandamapreduce_spark" / "plans"
+    pat = re.compile(r"\bspark\.read\b|\.read\.parquet\(")
+    offenders = [
+        f"{p.name}:{i}: {line.strip()}"
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if pat.search(line) and not line.lstrip().startswith("#")
+    ]
+    assert not offenders, f"direct table reads under plans/: {offenders}"
+
+
 def test_delay_seconds_contract_sub_millisecond(spark, oracle):
     # q178/q182 contract (r6 verdict #1): delay seconds are the CEIL of
     # the exact MICROSECOND difference on both engines. The adversarial

@@ -10,6 +10,8 @@ fall over at 1000× the data.
 
 from __future__ import annotations
 
+import pytest
+
 from pandamapreduce_spark.plans import REGISTRY
 
 from tests.conftest import SF_DIR
@@ -21,12 +23,23 @@ def plan_of(spark, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_filter_pushdown_reaches_scan(spark):
-    plan = plan_of(spark, "q02_filter_project")
+@pytest.mark.parametrize(
+    "name, predicates",
+    [
+        ("q02_filter_project", ()),
+        # timestamp literals cast in the builder still reach the scans
+        ("q03_top_orders", ("GreaterThan(l_shipdate,1998-01-01T00:00)", "LessThan(o_orderdate,1998-01-01T00:00)")),
+    ],
+    ids=["q02_filter_project", "q03_top_orders"],
+)
+def test_filter_pushdown_reaches_scan(spark, name, predicates):
+    plan = plan_of(spark, name)
     assert "PushedFilters: [" in plan
+    pushed = [part.split("]", 1)[0] for part in plan.split("PushedFilters: [")[1:]]
     # at least one real predicate pushed (not an empty list)
-    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-    assert pushed.strip(), plan
+    assert pushed[0].strip(), plan
+    for pred in predicates:
+        assert any(pred in p for p in pushed), (pred, pushed)
 
 
 def test_column_pruning_reaches_scan(spark):
@@ -833,10 +846,7 @@ def test_pareto_prefix_sum_is_distributed(spark):
 # --- round-8: shared distributed-prefix helper -----------------------------
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize(
+@pytest.mark.parametrize(
     "name",
     [
         "q90_sequence_packing",
