@@ -1,7 +1,8 @@
 """Cosine similarity over ``array<float>`` embedding columns, in its
 three forms: the JVM column expression (``cosine``), the DuckDB SQL
 text the oracles use (``cosine_sql``), and the numpy block kernel the
-cogrouped Arrow similarity joins use (``cosine_block``).
+cogrouped Arrow similarity joins use (``cosine_block``); plus
+``vec_lit``, the one way to put a driver-side float vector into a plan.
 
 All arithmetic is double-precision, sequential left-to-right fold —
 the same evaluation order DuckDB's list functions use — so cosine /
@@ -22,6 +23,17 @@ from pyspark.sql import functions as F
 def _dbl(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("array<double>")
+
+
+def vec_lit(values) -> Column:
+    """A driver-side float vector as ONE ``array<double>`` literal.
+    PySpark ships the ndarray as a Java ``double[]`` filled element by
+    element: about half the py4j commands of ``F.array(*[F.lit(v) ...])``
+    (a ``lit`` per element plus the ``array``). Values are the same
+    doubles either way; the element type is ``containsNull``."""
+    import numpy as np
+
+    return F.lit(np.asarray(values, dtype=np.float64))
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

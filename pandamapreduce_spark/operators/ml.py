@@ -19,26 +19,38 @@ from pyspark.sql import functions as F
 
 from pandamapreduce_spark.caching import release_one, scoped_persist
 from pandamapreduce_spark.functions import dot
-from pandamapreduce_spark.functions.vector import _dbl
+from pandamapreduce_spark.functions.vector import _dbl, vec_lit
+
+
+def _centroid_dists(x: Column, centroids: list[tuple[int, list[float]]]) -> Column:
+    """One ``(d, cid)`` struct per centroid, ``d = x·x - 2 x·c + c·c``
+    evaluated left to right, the order of every k-means/IVF oracle.
+    Struct ordering is lexicographic, so the smallest struct is the
+    nearest centroid with the lowest id on ties. Each distance
+    expression appears exactly ONCE — a chained when() argmin
+    duplicates subtrees exponentially in k."""
+    xx = dot(x, x)
+    entries = []
+    for cid, cvec in centroids:
+        c = vec_lit(cvec)
+        entries.append(F.struct((xx - 2 * dot(x, c) + dot(c, c)).alias("d"), F.lit(cid).alias("cid")))
+    return F.array(*entries)
 
 
 def assign_clusters(vectors: DataFrame, centroids: list[tuple[int, list[float]]], vec_col: str = "embedding") -> DataFrame:
     """Assign each vector to its nearest centroid (squared-L2,
     tie-break on centroid id). ``centroids`` are plain driver-side
     values → broadcast as literals inside the plan."""
-    x = F.col(vec_col)
-    xx = dot(x, x)
-    # argmin via array_min over (dist, cid) structs: struct ordering is
-    # lexicographic, so the min is the nearest centroid with the lowest
-    # id on ties. Each distance expression appears exactly ONCE — a
-    # chained when() argmin duplicates subtrees exponentially in k.
-    entries = []
-    for cid, cvec in centroids:
-        c = F.array(*[F.lit(v) for v in cvec])
-        d = xx - 2 * dot(x, c) + dot(c, c)
-        entries.append(F.struct(d.alias("d"), F.lit(cid).alias("cid")))
-    best = F.array_min(F.array(*entries))
+    best = F.array_min(_centroid_dists(F.col(vec_col), centroids))
     return vectors.withColumn("cluster_id", best["cid"]).withColumn("dist2", best["d"])
+
+
+def nearest_centroids(centroids: list[tuple[int, list[float]]], nprobe: int, vec_col: str = "embedding") -> Column:
+    """The ``nprobe`` nearest centroids of each vector as ``(d, cid)``
+    structs, nearest first, ties to the lowest id: the IVF probe rule.
+    The first element is ``assign_clusters``' ``(dist2, cluster_id)``,
+    bitwise (same distance expression, same ordering)."""
+    return F.slice(F.array_sort(_centroid_dists(F.col(vec_col), centroids)), 1, nprobe)
 
 
 def update_centroids(assigned: DataFrame, dim: int, vec_col: str = "embedding") -> list[tuple[int, list[float]]]:
@@ -93,7 +105,7 @@ def gmm_em(
 
     def log_density(c: int) -> Column:
         """log p(x, z=c) under the current parameters."""
-        mu = F.array(*[F.lit(v) for v in mus[c]])
+        mu = vec_lit(mus[c])
         d2 = dot(x, x) - 2 * dot(x, mu) + F.lit(sum(v * v for v in mus[c]))
         return -d2 / (2 * sig2[c]) + F.lit(
             math.log(pis[c]) - 0.5 * dim * math.log(2 * math.pi * sig2[c])
@@ -187,7 +199,7 @@ def cmeans(
             xx = dot(x, x)
             d2s = []
             for c in range(k):
-                mu = F.array(*[F.lit(v) for v in cents[c]])
+                mu = vec_lit(cents[c])
                 d2 = xx - 2 * dot(x, mu) + F.lit(sum(v * v for v in cents[c]))
                 d2s.append(F.greatest(d2, F.lit(1e-12)).alias(f"d{c}"))
             scored = vectors.select(id_col, vec_col, *d2s)

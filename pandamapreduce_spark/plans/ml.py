@@ -11,8 +11,10 @@ from pyspark.sql import functions as F
 
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.functions import dot
-from pandamapreduce_spark.operators.ml import kmeans
+from pandamapreduce_spark.functions.vector import vec_lit
+from pandamapreduce_spark.operators.ml import assign_clusters, kmeans, nearest_centroids
 from pandamapreduce_spark.plans.registry import query
+from pandamapreduce_spark.plans.similarity import N_QUERIES, TOP_K, _keyed_lane
 
 DIM = 64
 
@@ -41,7 +43,7 @@ def q48_gemv(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned embeddings table, the vector broadcasts as a literal;
     one map-side fold per row, zero shuffle."""
     emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    w = F.array(*[F.lit(v) for v in WEIGHTS])
+    w = vec_lit(WEIGHTS)
     return emb.select("vec_id", dot(F.col("embedding"), w).alias("y")).orderBy("vec_id")
 
 
@@ -99,6 +101,27 @@ def q47_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivf_seeds(emb: DataFrame) -> list[tuple[int, list[float]]]:
+    """The IVF coarse quantizer's 8 centroids, ``(cid, vector)`` for
+    ``vec_id < 8`` in id order (the oracles' ``c`` CTE): one bounded
+    driver collect, sorted on the driver (a Spark ``orderBy`` would add
+    a sampling job and a range shuffle for 8 rows)."""
+    return sorted(
+        (int(r.vec_id), [float(v) for v in r.embedding]) for r in emb.where(F.col("vec_id") < 8).collect()
+    )
+
+
+def _ivf_knn(spark: SparkSession, sf_dir: str, method: str, nprobe: int) -> DataFrame:
+    """IVF search: each corpus vector sits in its nearest cell, each
+    query probes its ``nprobe`` nearest cells (``nearest_centroids``,
+    the same distance expression and tie order as the assignment)."""
+    emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
+    seeds = _ivf_seeds(emb)
+    return _keyed_lane(
+        assign_clusters(emb, seeds), method, F.col("cluster_id"), F.explode(nearest_centroids(seeds, nprobe)["cid"])
+    )
+
+
 @query(
     "q55_ivf_knn",
     oracle=f"""
@@ -124,52 +147,19 @@ def q47_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * sqrt(list_dot_product(cast(x.embedding as double[]), cast(x.embedding as double[]))))) DESC,
                x.vec_id) AS rank
       FROM assigned q JOIN assigned x ON q.cid = x.cid AND q.vec_id <> x.vec_id
-      WHERE q.vec_id < 10
-    ) WHERE rank <= 5
+      WHERE q.vec_id < {N_QUERIES}
+    ) WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
     """,
     doc="IVF-style ANN: k-means coarse quantizer (8 cells, 1 probe) -> exact top-5 within the query's cell.",
     tags=("similarity", "ivf", "ml"),
 )
-def q55_ivf_knn(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame | None = None,
-    seeds: list | None = None,
-) -> DataFrame:
+def q55_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF scale path for billion-vector ANN: assignment is
     map-only against broadcast centroids; search joins on the cell id
-    (co-partitioned equi-join). Recall improves with n_probe cells;
-    1 probe here keeps the oracle simple.
-
-    ``emb``/``seeds`` let a composing caller (q171) share ONE persisted
-    embeddings frame and ONE driver-side seed collect across the IVF
-    lanes instead of re-scanning and re-collecting per lane (guide
-    §2.4/§5); standalone behavior is unchanged."""
-    from pandamapreduce_spark.functions import cosine
-    from pandamapreduce_spark.operators.ml import assign_clusters
-
-    if emb is None:
-        emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    if seeds is None:
-        seeds = [
-            (int(r.vec_id), [float(v) for v in r.embedding])
-            for r in emb.where(F.col("vec_id") < 8).orderBy("vec_id").collect()
-        ]
-    assigned = assign_clusters(emb, seeds).select("vec_id", "embedding", "cluster_id")
-    q = assigned.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), F.col("cluster_id").alias("q_cell")
-    )
-    x = assigned.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), F.col("cluster_id").alias("c_cell"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        x.join(F.broadcast(q), (F.col("q_cell") == F.col("c_cell")) & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    (co-partitioned equi-join). Recall improves with n_probe cells
+    (q77); 1 probe here keeps the oracle simple."""
+    return _ivf_knn(spark, sf_dir, "ivf_1probe", 1)
 
 
 GMM_SIGMA = [1.0 + k / 10.0 for k in range(8)]
@@ -217,8 +207,8 @@ def q58_gmm_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
     c = emb.where(F.col("vec_id") < 8).select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
     x, cv = F.col("embedding"), F.col("cvec")
-    sigma_arr = F.array(*[F.lit(s) for s in GMM_SIGMA])
-    const_arr = F.array(*[F.lit(v) for v in GMM_CONST])
+    sigma_arr = vec_lit(GMM_SIGMA)
+    const_arr = vec_lit(GMM_CONST)
     dist2 = dot(x, x) - 2 * dot(x, cv) + dot(cv, cv)
     log_score = -dist2 / (2 * sigma_arr[F.col("cid")] * sigma_arr[F.col("cid")]) + const_arr[F.col("cid")]
     scored = emb.crossJoin(F.broadcast(c)).select("vec_id", "cid", log_score.alias("log_score"))
@@ -488,7 +478,7 @@ def q54_kmeans_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
                   - 2 * list_dot_product(cast(e.embedding as double[]), cast(c.cvec as double[]))
                   + list_dot_product(cast(c.cvec as double[]), cast(c.cvec as double[]))), c.cid) AS rn
         FROM embeddings e CROSS JOIN c
-        WHERE e.vec_id < 10
+        WHERE e.vec_id < {N_QUERIES}
       ) WHERE rn <= 2
     )
     SELECT query_id, neighbor_id, rank, cos_sim FROM (
@@ -502,64 +492,20 @@ def q54_kmeans_iterative(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * sqrt(list_dot_product(cast(x.embedding as double[]), cast(x.embedding as double[]))))) DESC,
                x.vec_id) AS rank
       FROM queries q JOIN corpus x ON q.cid = x.cid AND q.vec_id <> x.vec_id
-    ) WHERE rank <= 5
+    ) WHERE rank <= {TOP_K}
     ORDER BY query_id, rank
     """,
     doc="IVF ANN with nprobe=2: each query searches its TWO nearest cells (corpus stays 1 cell/vector) — the IVF recall knob, twin of q74's LSH multi-probe.",
     tags=("similarity", "ivf", "ml"),
 )
-def q77_ivf_nprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame | None = None,
-    seeds: list | None = None,
-) -> DataFrame:
+def q77_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nprobe is THE recall/cost knob of IVF search: the corpus keeps
     exactly one cell per vector (disjoint candidates, no dedup), while
     each query fans out to its nprobe nearest centroids. Scale: the
     fan-out multiplies only the broadcast query set; the search join
     stays a co-partitioned equi-join on the cell id, touching
-    nprobe/k of the corpus per query.
-
-    ``emb``/``seeds``: shared persisted embeddings frame + one seed
-    collect from a composing caller (q171) — see q55."""
-    from pandamapreduce_spark.functions import cosine
-    from pandamapreduce_spark.operators.ml import assign_clusters
-
-    if emb is None:
-        emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    if seeds is None:
-        seeds = [
-            (int(r.vec_id), [float(v) for v in r.embedding])
-            for r in emb.where(F.col("vec_id") < 8).orderBy("vec_id").collect()
-        ]
-    corpus = assign_clusters(emb, seeds).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), F.col("cluster_id").alias("c_cell")
-    )
-    # query side: rank all centroids by squared distance, keep the 2 nearest
-    qvecs = emb.where(F.col("vec_id") < 10)
-    seed_arr = F.array(*[F.struct(F.lit(cid).alias("cid"), F.array(*[F.lit(v) for v in vec]).alias("cvec")) for cid, vec in seeds])
-    from pandamapreduce_spark.functions import dot
-
-    exploded = qvecs.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), F.explode(seed_arr).alias("s")
-    ).select(
-        "query_id",
-        "q_emb",
-        F.col("s.cid").alias("q_cell"),
-        (dot(F.col("q_emb"), F.col("s.cvec")) * -2 + dot(F.col("s.cvec"), F.col("s.cvec")) + dot(F.col("q_emb"), F.col("q_emb"))).alias("d2"),
-    )
-    wq = Window.partitionBy("query_id").orderBy("d2", "q_cell")
-    q = exploded.withColumn("crn", F.row_number().over(wq)).where(F.col("crn") <= 2).select("query_id", "q_emb", "q_cell")
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        corpus.join(F.broadcast(q), (F.col("q_cell") == F.col("c_cell")) & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    nprobe/k of the corpus per query."""
+    return _ivf_knn(spark, sf_dir, "ivf_2probe", 2)
 
 
 # --- q97: per-label embedding centroids -----------------------------------

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.functions import cosine, cosine_sql, dot
-from pandamapreduce_spark.functions.vector import cosine_block
+from pandamapreduce_spark.functions.vector import cosine_block, vec_lit
 from pandamapreduce_spark.plans.registry import query
 
 N_PLANES = 8
@@ -54,9 +54,42 @@ def _bucket_sql(vec: str, n_planes: int = N_PLANES) -> str:
 def _bucket_col(vec: str, n_planes: int = N_PLANES) -> F.Column:
     total = F.lit(0)
     for i, plane in enumerate(HYPERPLANES[:n_planes]):
-        lit_plane = F.array(*[F.lit(v) for v in plane])
-        total = total + F.when(dot(F.col(vec), lit_plane) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
+        total = total + F.when(dot(F.col(vec), vec_lit(plane)) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
     return total
+
+
+def _ann_topk(corpus: DataFrame, queries: DataFrame, on: F.Column) -> DataFrame:
+    """The verify → top-k tail of every JVM kNN lane (q40, q42, q74,
+    q55, q77, q171). ``corpus`` (``neighbor_id``, ``c_emb``) streams
+    once against the broadcast ``queries`` (``method``, ``query_id``,
+    ``q_emb``); ``on`` is the lane's blocking rule. Each candidate is
+    verified with ``cosine``; the top ``TOP_K`` per ``(method,
+    query_id)`` are kept, ties broken on ``neighbor_id``."""
+    w = Window.partitionBy("method", "query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    return (
+        corpus.join(F.broadcast(queries), on & (F.col("query_id") != F.col("neighbor_id")))
+        .select("method", "query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_sim"))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= TOP_K)
+    )
+
+
+def _keyed_lane(keyed: DataFrame, method: str, key: F.Column, probe: F.Column) -> DataFrame:
+    """A keyed kNN lane over ``keyed`` (``vec_id``, ``embedding``, ...):
+    each corpus row sits under ONE ``key``; each query row searches
+    the keys ``probe`` yields (a column, or an ``explode``)."""
+    corpus = keyed.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), key.alias("c_key"))
+    queries = keyed.where(F.col("vec_id") < N_QUERIES).select(
+        F.lit(method).alias("method"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        probe.alias("probe"),
+    )
+    return (
+        _ann_topk(corpus, queries, F.col("probe") == F.col("c_key"))
+        .select("query_id", "neighbor_id", "rank", "cos_sim")
+        .orderBy("query_id", "rank")
+    )
 
 
 @query(
@@ -76,28 +109,18 @@ def _bucket_col(vec: str, n_planes: int = N_PLANES) -> F.Column:
     bench=True,
     tags=("similarity", "knn"),
 )
-def q40_knn_bruteforce(
-    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
-) -> DataFrame:
+def q40_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: the query set broadcasts (it is small by construction);
     the corpus streams once — no corpus self-shuffle. Ranking windows
     partition by query_id, so parallelism = n_queries × corpus splits.
-
-    ``emb`` lets a composing caller (q171) pass ONE shared persisted
-    embeddings frame instead of re-scanning + re-spreading the parquet
-    per lane (guide §2.4/§5); standalone behavior is unchanged."""
-    if emb is None:
-        emb = load_table(spark, sf_dir, "embeddings", spread=True)
+    No blocking key: every pair is a candidate (a nested-loop join)."""
+    emb = load_table(spark, sf_dir, "embeddings", spread=True)
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+        F.lit("exact").alias("method"), F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
+        _ann_topk(c, q, F.lit(True))
         .select("query_id", "neighbor_id", "rank", "cos_sim")
         .orderBy("query_id", "rank")
     )
@@ -126,6 +149,11 @@ def q41_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings", spread=True)
+    return emb.select("vec_id", "embedding", _bucket_col("embedding").alias("bucket"))
+
+
 @query(
     "q42_lsh_knn",
     oracle=f"""
@@ -143,31 +171,11 @@ def q41_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Approximate ANN: top-k within the query's LSH bucket only.",
     tags=("similarity", "lsh", "knn"),
 )
-def q42_lsh_knn(
-    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
-) -> DataFrame:
+def q42_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path for ANN: candidates come only from the query's
     bucket (expected corpus/2^8 of the data); join is keyed on bucket,
-    so it's a co-partitioned equi-join, not a cross product.
-
-    ``emb``: shared persisted embeddings frame from a composing caller
-    (q171) — see q40."""
-    if emb is None:
-        emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    b = emb.select("vec_id", "embedding", _bucket_col("embedding").alias("bucket"))
-    q = b.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), "bucket"
-    )
-    c = b.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), F.col("bucket").alias("c_bucket"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        c.join(F.broadcast(q), (F.col("bucket") == F.col("c_bucket")) & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    so it's a co-partitioned equi-join, not a cross product."""
+    return _keyed_lane(_bucketed(spark, sf_dir), "lsh_bucket", F.col("bucket"), F.col("bucket"))
 
 
 @query(
@@ -193,9 +201,7 @@ def q42_lsh_knn(
     doc="Multi-probe sign-LSH ANN: query probes its bucket + all 8 Hamming-1 neighbor buckets — ~9/256 of the corpus instead of 1/256, recovering recall lost at bucket boundaries.",
     tags=("similarity", "lsh", "knn"),
 )
-def q74_multiprobe_lsh_knn(
-    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
-) -> DataFrame:
+def q74_multiprobe_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe LSH (Lv et al., VLDB'07 idea specialized to sign
     LSH): a near neighbor that lands one hyperplane-sign away from the
     query is recovered by ALSO probing each single-bit-flip bucket.
@@ -203,27 +209,9 @@ def q74_multiprobe_lsh_knn(
     the corpus still stores each vector in exactly ONE bucket, so
     candidates are disjoint across probes (no dedup needed) and the
     join stays a co-partitioned equi-join on the bucket key. Probing
-    cost is 9/256 of the corpus per query vs. full-scan brute force.
-
-    ``emb``: shared persisted embeddings frame from a composing caller
-    (q171) — see q40."""
-    if emb is None:
-        emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    b = emb.select("vec_id", "embedding", _bucket_col("embedding").alias("bucket"))
-    q = b.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.explode(_probe_array(N_PLANES, 1)).alias("probe"),
-    )
-    c = b.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), F.col("bucket").alias("c_bucket"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        c.join(F.broadcast(q), (F.col("probe") == F.col("c_bucket")) & (F.col("query_id") != F.col("neighbor_id")))
-        .select("query_id", "neighbor_id", cosine(F.col("q_emb"), F.col("c_emb")).alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
-        .orderBy("query_id", "rank")
+    cost is 9/256 of the corpus per query vs. full-scan brute force."""
+    return _keyed_lane(
+        _bucketed(spark, sf_dir), "lsh_multiprobe", F.col("bucket"), F.explode(_probe_array(N_PLANES, 1))
     )
 
 
@@ -799,9 +787,10 @@ def q166_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _recall_oracle() -> str:
-    """Composes the already-registered q40/q42/q74 oracle texts as CTEs —
-    the ground truth and both approximate methods are THE shipped lanes,
-    not re-derivations, so this lane measures exactly what users run."""
+    """Composes the already-registered q40/q42/q74/q55/q77 oracle texts
+    as CTEs — the ground truth and all four approximate methods are THE
+    shipped lanes, not re-derivations, so this lane measures exactly
+    what users run."""
     from pandamapreduce_spark.plans.registry import REGISTRY
 
     exact = REGISTRY["q40_knn_bruteforce"].oracle
@@ -837,75 +826,89 @@ def _recall_oracle() -> str:
 
 @query(
     "q171_ann_recall",
-    bench=True,  # per-round signal for the 5-lane ANN evaluation composite
+    bench=True,  # per-round signal for the 5-method ANN evaluation
     doc=f"ANN quality evaluation: recall@{TOP_K} of all four approximate searches — single-bucket sign-LSH (q42), 9-probe LSH (q74), IVF nprobe=1 (q55), IVF nprobe=2 (q77) — against the exact brute-force top-{TOP_K} (q40); hits = ground-truth pairs the method returned; exact integer counts, one IEEE division per method row.",
-    oracle=None,  # installed below: composes the q40/q42/q74 oracles
+    oracle=None,  # composes q55/q77 (ml.py, imported later): installed by plans/__init__.py
     tags=("similarity", "knn", "evaluation"),
 )
 def q171_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The evaluation harness every ANN deployment needs: approximate
     search is only shippable WITH a measured recall against exact
-    ground truth on a sample. Composes the three shipped lanes —
-    q40 (exact), q42 (single bucket: ~1/256 of the corpus probed),
-    q74 (multi-probe: ~9/256) — and reports recall@{TOP_K} per method,
-    so the probe-count/recall trade-off is one query away.
+    ground truth on a sample. Scores the blocking rules of the five
+    shipped lanes — q40 (exact), q42 (one bucket, ~1/256 of the
+    corpus), q74 (bucket + Hamming-1 probes, ~9/256), q55 (nearest
+    IVF cell), q77 (two nearest cells) — and reports recall@{TOP_K}
+    for each approximate method: 4 rows.
 
-    Scale shape: ground truth is computed on the (small, broadcast)
-    query sample only — the standard practice; the recall join keys on
-    (query_id, neighbor_id) integer pairs, n_queries x k rows per
-    side. Recall = hits / n_exact via one exact int/int IEEE division
-    per method row; the report is 2 rows.
-
-    r11 (guide §2.4/§5): the five composed lanes each re-scanned and
-    re-``spread`` the embeddings parquet (28 scans / 78 Exchange in the
-    before-plan) and the IVF pair re-collected the seed centroids; the
-    corpus frame is now persisted ONCE and threaded through every lane,
-    and the seeds are collected once from the cache."""
+    One pass: the corpus is persisted once with its bucket and its two
+    nearest cells; each corpus row is filed under three blocking keys
+    (``all``/0, bucket, nearest cell) and each query row expands to one
+    probe per (method, key), so ONE candidate join, ONE top-k window
+    and ONE hits join + ``groupBy("method")`` score every method. The
+    fixed method list is left-joined: a method with no hits reports 0
+    (lsh_bucket at sf0.01/0.1). Recall = hits / n_exact, one exact
+    int/int IEEE division per row."""
     from pandamapreduce_spark.caching import scoped_persist
+    from pandamapreduce_spark.operators.ml import nearest_centroids
+    from pandamapreduce_spark.plans.ml import _ivf_seeds
 
-    emb = scoped_persist(
-        load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
+    emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
+    seeds = _ivf_seeds(emb)
+    keyed = scoped_persist(
+        emb.select(
+            "vec_id",
+            "embedding",
+            _bucket_col("embedding").alias("bucket"),
+            nearest_centroids(seeds, 2)["cid"].alias("cells"),
+        )
     )
-    exact = q40_knn_bruteforce(spark, sf_dir, emb=emb).select("query_id", "neighbor_id")
-    exact = scoped_persist(exact)
+    keys = (("all", F.lit(0)), ("bucket", F.col("bucket")), ("cell", F.col("cells")[0]))
+    corpus = keyed.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        F.inline(F.array(*[F.struct(F.lit(f).alias("c_family"), k.alias("c_key")) for f, k in keys])),
+    )
+    probes = (
+        ("exact", "all", F.array(F.lit(0))),
+        ("ivf_1probe", "cell", F.slice(F.col("cells"), 1, 1)),
+        ("ivf_2probe", "cell", F.col("cells")),
+        ("lsh_bucket", "bucket", F.array(F.col("bucket"))),
+        ("lsh_multiprobe", "bucket", _probe_array(N_PLANES, 1)),
+    )
+    specs = [F.struct(F.lit(m).alias("method"), F.lit(f).alias("family"), p.alias("probes")) for m, f, p in probes]
+    queries = (
+        keyed.where(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), F.inline(F.array(*specs)))
+        .select("method", "query_id", "q_emb", "family", F.explode("probes").alias("probe"))
+    )
+    on = (F.col("c_family") == F.col("family")) & (F.col("c_key") == F.col("probe"))
+    top = _ann_topk(corpus, queries, on).select("method", "query_id", "neighbor_id")
+    exact = top.where(F.col("method") == "exact").select("query_id", "neighbor_id")
+    hits = (
+        top.where(F.col("method") != "exact")
+        .join(exact, ["query_id", "neighbor_id"])
+        .groupBy("method")
+        .agg(F.count(F.lit(1)).alias("hits"))
+    )
     base = exact.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_exact"),
         F.count_distinct("query_id").cast("bigint").alias("n_queries"),
     )
-    from pandamapreduce_spark.plans.ml import q55_ivf_knn, q77_ivf_nprobe
-
-    seeds = [
-        (int(r.vec_id), [float(v) for v in r.embedding])
-        for r in emb.where(F.col("vec_id") < 8).orderBy("vec_id").collect()
-    ]
-    methods = (
-        ("lsh_bucket", lambda: q42_lsh_knn(spark, sf_dir, emb=emb)),
-        ("lsh_multiprobe", lambda: q74_multiprobe_lsh_knn(spark, sf_dir, emb=emb)),
-        ("ivf_1probe", lambda: q55_ivf_knn(spark, sf_dir, emb=emb, seeds=seeds)),
-        ("ivf_2probe", lambda: q77_ivf_nprobe(spark, sf_dir, emb=emb, seeds=seeds)),
-    )
-    h = None
-    for method, fn in methods:
-        approx = fn().select("query_id", "neighbor_id")
-        hits = exact.join(approx, ["query_id", "neighbor_id"]).agg(
-            F.count(F.lit(1)).cast("bigint").alias("hits")
-        ).withColumn("method", F.lit(method))
-        h = hits if h is None else h.union(hits)
+    approx = [F.lit(m) for m, _, _ in probes if m != "exact"]
+    methods = spark.range(1).select(F.explode(F.array(*approx)).alias("method"))
+    n_hits = F.coalesce(F.col("hits"), F.lit(0)).cast("bigint")
     return (
-        h.crossJoin(F.broadcast(base))
+        methods.join(hits, "method", "left")
+        .crossJoin(F.broadcast(base))
         .select(
             "method",
             "n_queries",
             "n_exact",
-            "hits",
-            (F.col("hits").cast("double") / F.col("n_exact").cast("double")).alias("recall"),
+            n_hits.alias("hits"),
+            (n_hits.cast("double") / F.col("n_exact").cast("double")).alias("recall"),
         )
         .orderBy("method")
     )
-
-
-# q171's oracle composes q55/q77 (ml.py, imported after this module),
-# so plans/__init__.py installs it once every lane is registered.
 
 
 # --- q172: entity resolution (fuzzy match -> components -> canonical) ------

@@ -36,3 +36,15 @@ def duckdb_rows(sql: str, **frames) -> list[tuple]:
         return con.sql(sql).fetchall()
     finally:
         con.close()
+
+
+def jobs_run(spark, group: str, fn):
+    """(fn(), number of Spark jobs fn ran), counted under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

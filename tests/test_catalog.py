@@ -15,19 +15,7 @@ from pyspark.sql import types as T
 
 from pandamapreduce_spark.catalog import TABLES, load_table
 
-from tests.conftest import SF_DIR
-
-
-def jobs_run(spark, group: str, fn):
-    """(fn(), number of Spark jobs fn ran), counted under job group ``group``."""
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import SF_DIR, jobs_run
 
 
 def optimized_plan(df) -> str:

@@ -94,6 +94,44 @@ def test_assign_ties_break_on_lowest_cid(spark):
     assert r.cluster_id == 0
 
 
+def test_ivf_probe_ranks_by_assignment_distance(spark, oracle):
+    """The IVF probe (q55/q77/q171) ranks centroids by assign_clusters'
+    own distance: for every vector, its first cell and distance are
+    assign_clusters' (cluster_id, dist2), bitwise, the ranking is
+    ascending on (d, cid), and every (vector, centroid) distance equals
+    the IVF oracles' ``(x·x - 2 x·c) + c·c`` in DuckDB, bitwise — the
+    grouping a reordered sum (``x·c * -2 + c·c + x·x``) breaks."""
+    from pandamapreduce_spark.operators.ml import nearest_centroids
+    from pandamapreduce_spark.plans.ml import _ivf_seeds
+
+    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
+    seeds = _ivf_seeds(emb)
+    rows = (
+        assign_clusters(emb, seeds)
+        .select("vec_id", "cluster_id", "dist2", nearest_centroids(seeds, len(seeds)).alias("ranked"))
+        .collect()
+    )
+    want = {
+        (v, c): d
+        for v, c, d in oracle.execute(
+            """WITH c AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < 8)
+            SELECT e.vec_id, c.cid,
+                   list_dot_product(cast(e.embedding as double[]), cast(e.embedding as double[]))
+                   - 2 * list_dot_product(cast(e.embedding as double[]), cast(c.cvec as double[]))
+                   + list_dot_product(cast(c.cvec as double[]), cast(c.cvec as double[]))
+            FROM embeddings e CROSS JOIN c"""
+        ).fetchall()
+    }
+    got = {}
+    for r in rows:
+        ranked = [(s.d, s.cid) for s in r.ranked]
+        assert ranked == sorted(ranked), r.vec_id
+        assert ranked[0] == (r.dist2, r.cluster_id), r.vec_id
+        got.update({(r.vec_id, cid): d for d, cid in ranked})
+    assert len(rows) == 500 and len(seeds) == 8
+    assert got == want
+
+
 def test_q59_pinned_oracle_is_honest_on_unknown_fixture():
     """q59's pinned literal-row oracle dispatches on an embeddings
     fingerprint; an UNPINNED fixture must yield 0 oracle rows (a loud

@@ -421,6 +421,77 @@ def test_bloom_prune_no_false_negatives(spark):
         assert r.n_bloom_pass >= r.n_items, (flag, r)
 
 
+def test_q121_hof_probe_equals_projection_probe(spark):
+    """The shipped probe (md5 digest bound once as a lambda variable)
+    must pass exactly the rows of the superseded shape (digest + BF_K
+    position columns projected, then per-position element_at filters)
+    — same bitmap, same positions, so the candidate id MULTISET over
+    the fixture lineitem must be identical."""
+    from pyspark.sql import functions as F
+
+    from pandamapreduce_spark.catalog import load_table
+    from pandamapreduce_spark.plans.relational import (
+        BF_K,
+        BF_M,
+        BF_PRICE,
+        _bf_key_spark_sql,
+        _bf_pos_spark_sql,
+    )
+
+    orders = load_table(spark, SF_DIR, "orders")
+    li = load_table(spark, SF_DIR, "lineitem")
+    keys = orders.where(
+        (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") > BF_PRICE)
+    ).select("o_orderkey")
+    khash = keys.select(F.expr(_bf_key_spark_sql("o_orderkey")).alias("h"))
+    bits = khash.select(
+        F.explode(F.array(*[F.expr(_bf_pos_spark_sql(i, "h")) for i in range(BF_K)])).alias("pos")
+    )
+    bitmap = (
+        bits.select(
+            (F.col("pos") / 64).cast("int").alias("w"),
+            F.expr("shiftleft(1L, cast(pmod(pos, 64) as int))").alias("b"),
+        )
+        .groupBy("w")
+        .agg(F.expr("bit_or(b)").alias("bits"))
+    )
+    words = {int(r["w"]): int(r["bits"]) for r in bitmap.collect()}
+    barr_vals = [words.get(w, 0) for w in range(BF_M // 64)]
+
+    # shipped shape (mirrors q121_bloom_prune_join)
+    from pandamapreduce_spark.plans.relational import BF_BITS
+
+    arr_sql = "array(" + ",".join(f"{v}L" for v in barr_vals) + ")"
+    checks = " AND ".join(
+        f"(element_at(B, cast(pmod(shiftright(h, {BF_BITS * i}), {BF_M}) / 64 as int) + 1)"
+        f" & shiftleft(1L, cast(pmod(pmod(shiftright(h, {BF_BITS * i}), {BF_M}), 64) as int))) != 0L"
+        for i in range(BF_K)
+    )
+    new_pass = F.expr(
+        f"exists(array({_bf_key_spark_sql('l_orderkey')}),"
+        f" h -> exists(array({arr_sql}), B -> {checks}))"
+    )
+    new_ids = sorted(r[0] for r in li.where(new_pass).select("l_orderkey").collect())
+
+    # superseded shape (projection + per-position filters)
+    barr = F.lit(barr_vals)
+    lhash = li.withColumn("_bfh", F.expr(_bf_key_spark_sql("l_orderkey"))).select(
+        "*", *[F.expr(_bf_pos_spark_sql(i, "_bfh")).alias(f"_bp{i}") for i in range(BF_K)]
+    )
+    hits = []
+    for i in range(BF_K):
+        word = (F.col(f"_bp{i}") / F.lit(64)).cast("int") + F.lit(1)
+        mask = F.expr(f"shiftleft(1L, cast(pmod(_bp{i}, 64) as int))")
+        hits.append(F.element_at(barr, word).bitwiseAND(mask) != F.lit(0))
+    old_pass = hits[0]
+    for h in hits[1:]:
+        old_pass = old_pass & h
+    old_ids = sorted(r[0] for r in lhash.where(old_pass).select("l_orderkey").collect())
+
+    assert new_ids == old_ids
+    assert new_ids  # non-vacuous: the fixture plants passing keys
+
+
 def test_fuzzy_join_edit_distance_lower_bound(spark):
     """q120 invariant: reported edit distance is a true levenshtein —
     never below the length difference of the two prefixes."""

@@ -19,7 +19,7 @@ from pandamapreduce_spark.plans.warehouse import (
     SCD_OPEN_END,
 )
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 
 def test_pagerank_is_distribution_and_mass_flows_to_inflow(spark):
@@ -245,6 +245,60 @@ def test_triangle_count_matches_bruteforce(spark):
     assert row.n_wedges == wedges
     if wedges:
         assert abs(row.global_cc - 3 * tri / wedges) < 1e-12
+
+
+def test_q136_adjacency_explode_equals_join_shape(spark):
+    """The shipped edge-iterator (adjacency explode) must produce the
+    same census row as the superseded oe⋈na⋈nb join shape on the
+    fixture's co-purchase graph."""
+    from pandamapreduce_spark.caching import release_caches, scoped_persist
+    from pandamapreduce_spark.plans.warehouse import (
+        _PAIR_EXPLODE,
+        _baskets,
+        q136_triangle_count,
+    )
+
+    new_row = q136_triangle_count(spark, SF_DIR).collect()[0].asDict()
+
+    e = scoped_persist(
+        _baskets(spark, SF_DIR)
+        .select(F.explode(F.expr(_PAIR_EXPLODE)).alias("p"))
+        .select(F.col("p.a").alias("u"), F.col("p.b").alias("v"))
+        .distinct()
+    )
+    deg = scoped_persist(
+        e.select(F.col("u").alias("node"))
+        .unionAll(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    )
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    fwd = (F.col("du") < F.col("dv")) | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v")))
+    oe = scoped_persist(
+        e.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
+        )
+    )
+    adj = oe.groupBy("src").agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
+    na = adj.select(F.col("src").alias("u"), F.col("nbrs").alias("na"))
+    nb = adj.select(F.col("src").alias("v"), F.col("nbrs").alias("nb"))
+    old_tri = (
+        oe.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .join(na, "u")
+        .join(nb, "v", "left")
+        .select(
+            F.size(F.array_intersect(F.col("na"), F.coalesce(F.col("nb"), F.array()))).alias("t")
+        )
+        .agg(F.sum("t").cast("bigint").alias("tri"))
+        .collect()[0]["tri"]
+    )
+    release_caches()
+    assert new_row["n_triangles"] == old_tri
+    assert new_row["n_triangles"] > 0  # non-vacuous: the fixture plants triangles
 
 
 def test_interval_join_bin_width_invariant_and_sound(spark):
@@ -1414,6 +1468,60 @@ def test_ann_recall_matches_numpy_and_is_monotone_in_probes(spark):
     assert got.loc["lsh_bucket", "n_exact"] == n_exact
 
 
+ANN_LANES = {
+    "ivf_1probe": "q55_ivf_knn",
+    "ivf_2probe": "q77_ivf_nprobe",
+    "lsh_bucket": "q42_lsh_knn",
+    "lsh_multiprobe": "q74_multiprobe_lsh_knn",
+}
+
+
+def test_ann_recall_hits_equal_standalone_lane_overlap(spark):
+    """q171 scores every method in one candidate join: each method's
+    hits must equal the overlap, on (query_id, neighbor_id), of that
+    method's standalone lane with the standalone exact lane (q40)."""
+
+    def pairs(name):
+        return {(r.query_id, r.neighbor_id) for r in REGISTRY[name].build(spark, SF_DIR).collect()}
+
+    exact = pairs("q40_knn_bruteforce")
+    got = {r.method: r for r in REGISTRY["q171_ann_recall"].build(spark, SF_DIR).collect()}
+    assert sorted(got) == sorted(ANN_LANES)
+    for method, name in ANN_LANES.items():
+        assert got[method].hits == len(pairs(name) & exact), method
+        assert got[method].n_exact == len(exact), method
+    assert all(got[m].hits > 0 for m in ANN_LANES)  # non-vacuous at sf0.001
+
+
+def test_ann_recall_reports_methods_without_hits(spark):
+    """At sf0.01 the single-bucket LSH method finds none of the exact
+    neighbors; its row must still be reported, with 0 hits."""
+    got = {r.method: r.hits for r in REGISTRY["q171_ann_recall"].build(spark, "/root/testdata/sf0.01").collect()}
+    assert sorted(got) == sorted(ANN_LANES)
+    assert got["lsh_bucket"] == 0
+    assert got["lsh_multiprobe"] > 0
+
+
+def test_ann_recall_job_count(spark):
+    """q171 derives the bucket and IVF cells once and runs one
+    candidate join, one top-k window and one hits aggregation: 25 Spark
+    jobs per build + collect (the five-lane composition it replaced
+    ran 35)."""
+    from pandamapreduce_spark.caching import release_caches
+    from pandamapreduce_spark.catalog import load_table
+
+    load_table(spark, SF_DIR, "embeddings")  # the schema memo is warm
+    release_caches()
+    try:
+        rows, jobs = jobs_run(
+            spark, "q171.jobs", lambda: REGISTRY["q171_ann_recall"].build(spark, SF_DIR).collect()
+        )
+    finally:
+        release_caches()
+    assert len(rows) == len(ANN_LANES)
+    assert jobs == 25
+
+
 def test_entity_resolution_matches_python_unionfind(spark):
     """q172's clustering + survivorship vs a Python union-find over the
     q120 pair set (itself an oracle-verified lane) at sf0.001."""
@@ -1819,3 +1927,55 @@ def test_fk_discovery_matches_pandas_and_exercises_both_verdicts(spark):
         assert r.n_orphans == len(child) - contained
         assert r.containment == contained / len(child)
         assert r.holds == int(contained == len(child))
+
+
+def test_label_prop_union_agg_round_equals_old_join_round(spark):
+    """The union+agg label-prop round must land the same fixpoint as a
+    literal transcription of the superseded join+agg+left-join round,
+    on q33-derived fixture edges."""
+    from pandamapreduce_spark.plans.dedup import q33_neardup_verified
+    from pandamapreduce_spark.plans.training import connected_components
+
+    edges = (
+        q33_neardup_verified(spark, SF_DIR)
+        .select(F.col("doc_a"), F.col("doc_b"))
+        .localCheckpoint()
+    )
+    new_labels = connected_components(edges)
+    got = sorted((r["doc_id"], r["label"]) for r in new_labels.collect())
+
+    # superseded round shape, run to the same fixpoint
+    sym = edges.union(edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")))
+    e = sym.where(F.col("doc_a") != F.col("doc_b")).distinct().localCheckpoint()
+    labels = (
+        e.select(F.col("doc_a").alias("doc_id"))
+        .distinct()
+        .withColumn("label", F.col("doc_id"))
+        .localCheckpoint()
+    )
+    for _ in range(20):
+        neigh = (
+            e.join(labels, e["doc_b"] == labels["doc_id"])
+            .groupBy("doc_a")
+            .agg(F.min("label").alias("nmin"))
+        )
+        new = (
+            labels.join(neigh, labels["doc_id"] == neigh["doc_a"], "left")
+            .select(
+                "doc_id",
+                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
+            )
+            .localCheckpoint()
+        )
+        changed = (
+            new.alias("n")
+            .join(labels.alias("o"), "doc_id")
+            .where(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        labels = new
+        if changed == 0:
+            break
+    want = sorted((r["doc_id"], r["label"]) for r in labels.collect())
+    assert got == want
+    assert got  # non-vacuous: the fixture plants near-dup clusters
