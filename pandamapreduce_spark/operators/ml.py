@@ -45,12 +45,12 @@ def assign_clusters(vectors: DataFrame, centroids: list[tuple[int, list[float]]]
     return vectors.withColumn("cluster_id", best["cid"]).withColumn("dist2", best["d"])
 
 
-def nearest_centroids(centroids: list[tuple[int, list[float]]], nprobe: int, vec_col: str = "embedding") -> Column:
-    """The ``nprobe`` nearest centroids of each vector as ``(d, cid)``
-    structs, nearest first, ties to the lowest id: the IVF probe rule.
-    The first element is ``assign_clusters``' ``(dist2, cluster_id)``,
-    bitwise (same distance expression, same ordering)."""
-    return F.slice(F.array_sort(_centroid_dists(F.col(vec_col), centroids)), 1, nprobe)
+def nearest_centroids(x: Column, centroids: list[tuple[int, list[float]]]) -> Column:
+    """Every centroid as a ``(d, cid)`` struct, nearest to vector ``x``
+    first, ties to the lowest id: the IVF probe order (nprobe = a
+    prefix). The first element is ``assign_clusters``' ``(dist2,
+    cluster_id)``, bitwise (same distance expression, same ordering)."""
+    return F.array_sort(_centroid_dists(x, centroids))
 
 
 def update_centroids(assigned: DataFrame, dim: int, vec_col: str = "embedding") -> list[tuple[int, list[float]]]:

@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.functions import dot
 from pandamapreduce_spark.functions.vector import vec_lit
-from pandamapreduce_spark.operators.ml import assign_clusters, kmeans, nearest_centroids
+from pandamapreduce_spark.operators.ml import kmeans
 from pandamapreduce_spark.plans.registry import query
-from pandamapreduce_spark.plans.similarity import N_QUERIES, TOP_K, _keyed_lane
+from pandamapreduce_spark.plans.similarity import N_QUERIES, TOP_K, _ann_lane
 
 DIM = 64
 
@@ -101,27 +101,6 @@ def q47_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_seeds(emb: DataFrame) -> list[tuple[int, list[float]]]:
-    """The IVF coarse quantizer's 8 centroids, ``(cid, vector)`` for
-    ``vec_id < 8`` in id order (the oracles' ``c`` CTE): one bounded
-    driver collect, sorted on the driver (a Spark ``orderBy`` would add
-    a sampling job and a range shuffle for 8 rows)."""
-    return sorted(
-        (int(r.vec_id), [float(v) for v in r.embedding]) for r in emb.where(F.col("vec_id") < 8).collect()
-    )
-
-
-def _ivf_knn(spark: SparkSession, sf_dir: str, method: str, nprobe: int) -> DataFrame:
-    """IVF search: each corpus vector sits in its nearest cell, each
-    query probes its ``nprobe`` nearest cells (``nearest_centroids``,
-    the same distance expression and tie order as the assignment)."""
-    emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    seeds = _ivf_seeds(emb)
-    return _keyed_lane(
-        assign_clusters(emb, seeds), method, F.col("cluster_id"), F.explode(nearest_centroids(seeds, nprobe)["cid"])
-    )
-
-
 @query(
     "q55_ivf_knn",
     oracle=f"""
@@ -159,7 +138,7 @@ def q55_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only against broadcast centroids; search joins on the cell id
     (co-partitioned equi-join). Recall improves with n_probe cells
     (q77); 1 probe here keeps the oracle simple."""
-    return _ivf_knn(spark, sf_dir, "ivf_1probe", 1)
+    return _ann_lane(spark, sf_dir, "ivf_1probe")
 
 
 GMM_SIGMA = [1.0 + k / 10.0 for k in range(8)]
@@ -505,7 +484,7 @@ def q77_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out multiplies only the broadcast query set; the search join
     stays a co-partitioned equi-join on the cell id, touching
     nprobe/k of the corpus per query."""
-    return _ivf_knn(spark, sf_dir, "ivf_2probe", 2)
+    return _ann_lane(spark, sf_dir, "ivf_2probe")
 
 
 # --- q97: per-label embedding centroids -----------------------------------

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pandamapreduce_spark.catalog import load_table
 from pandamapreduce_spark.functions import cosine, cosine_sql, dot
 from pandamapreduce_spark.functions.vector import cosine_block, vec_lit
+from pandamapreduce_spark.operators.ml import nearest_centroids
 from pandamapreduce_spark.plans.registry import query
 
 N_PLANES = 8
@@ -74,19 +75,82 @@ def _ann_topk(corpus: DataFrame, queries: DataFrame, on: F.Column) -> DataFrame:
     )
 
 
-def _keyed_lane(keyed: DataFrame, method: str, key: F.Column, probe: F.Column) -> DataFrame:
-    """A keyed kNN lane over ``keyed`` (``vec_id``, ``embedding``, ...):
-    each corpus row sits under ONE ``key``; each query row searches
-    the keys ``probe`` yields (a column, or an ``explode``)."""
-    corpus = keyed.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb"), key.alias("c_key"))
-    queries = keyed.where(F.col("vec_id") < N_QUERIES).select(
-        F.lit(method).alias("method"),
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        probe.alias("probe"),
+def _ivf_seeds(emb: DataFrame) -> list[tuple[int, list[float]]]:
+    """The IVF coarse quantizer's 8 centroids, ``(cid, vector)`` for
+    ``vec_id < 8`` in id order (the oracles' ``c`` CTE): one bounded
+    driver collect, sorted on the driver (a Spark ``orderBy`` would add
+    a sampling job and a range shuffle for 8 rows)."""
+    return sorted(
+        (int(r.vec_id), [float(v) for v in r.embedding]) for r in emb.where(F.col("vec_id") < 8).collect()
     )
+
+
+def _ann_rules() -> tuple[dict[str, F.Column], dict[str, tuple[str, F.Column]]]:
+    """The blocking rule of every JVM kNN lane, over a ``_keyed`` row.
+
+    ``keys``: per family, the ONE key each corpus row is filed under —
+    ``all`` files every row under 0, ``bucket`` under its sign-LSH
+    bucket, ``cell`` under its nearest IVF cell. ``probes``: per
+    method, its family and the keys each query row searches. Corpus
+    rows are disjoint across a method's probes, so no dedup is needed.
+    q40 runs the ``exact`` rule as a nested-loop join (no key at all);
+    q171 files it under ``all`` so that it rides the one candidate join."""
+    keys = {"all": F.lit(0), "bucket": F.col("bucket"), "cell": F.col("cells")[0]}
+    probes = {
+        "exact": ("all", F.array(F.lit(0))),
+        "ivf_1probe": ("cell", F.slice(F.col("cells"), 1, 1)),
+        "ivf_2probe": ("cell", F.slice(F.col("cells"), 1, 2)),
+        "lsh_bucket": ("bucket", F.array(F.col("bucket"))),
+        "lsh_multiprobe": ("bucket", _probe_array(N_PLANES, 1)),
+    }
+    return keys, probes
+
+
+def _keyed(emb: DataFrame, methods: list[str]) -> DataFrame:
+    """``emb`` (``vec_id``, ``embedding``) with the key columns that
+    ``methods``' rules read: ``bucket`` (``_bucket_col``) and ``cells``
+    (every IVF cell, nearest first; one seed collect)."""
+    families = {_ann_rules()[1][m][0] for m in methods}
+    cols = [F.col("vec_id"), F.col("embedding")]
+    if "bucket" in families:
+        cols.append(_bucket_col("embedding").alias("bucket"))
+    if "cell" in families:
+        cols.append(nearest_centroids(F.col("embedding"), _ivf_seeds(emb))["cid"].alias("cells"))
+    return emb.select(*cols)
+
+
+def _ann_search(keyed: DataFrame, methods: list[str]) -> DataFrame:
+    """The top ``TOP_K`` of each of ``methods`` for every query row of
+    ``keyed`` (a ``_keyed`` frame), in ONE candidate join: each corpus
+    row is filed under its key of every family the methods use, each
+    query row expands to one probe per (method, key), and a candidate
+    must match on (family, key)."""
+    keys, probes = _ann_rules()
+    families = sorted({probes[m][0] for m in methods})
+    corpus = keyed.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_emb"),
+        F.inline(F.array(*[F.struct(F.lit(f).alias("c_family"), keys[f].alias("c_key")) for f in families])),
+    )
+    specs = [
+        F.struct(F.lit(m).alias("method"), F.lit(probes[m][0]).alias("family"), probes[m][1].alias("probes"))
+        for m in methods
+    ]
+    queries = (
+        keyed.where(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), F.inline(F.array(*specs)))
+        .select("method", "query_id", "q_emb", "family", F.explode("probes").alias("probe"))
+    )
+    on = (F.col("c_family") == F.col("family")) & (F.col("c_key") == F.col("probe"))
+    return _ann_topk(corpus, queries, on)
+
+
+def _ann_lane(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
+    """A standalone keyed kNN lane (q42, q74, q55, q77): ``method``'s
+    rule alone through ``_ann_search``."""
+    emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
     return (
-        _ann_topk(corpus, queries, F.col("probe") == F.col("c_key"))
+        _ann_search(_keyed(emb, [method]), [method])
         .select("query_id", "neighbor_id", "rank", "cos_sim")
         .orderBy("query_id", "rank")
     )
@@ -149,11 +213,6 @@ def q41_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings", spread=True)
-    return emb.select("vec_id", "embedding", _bucket_col("embedding").alias("bucket"))
-
-
 @query(
     "q42_lsh_knn",
     oracle=f"""
@@ -175,7 +234,7 @@ def q42_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path for ANN: candidates come only from the query's
     bucket (expected corpus/2^8 of the data); join is keyed on bucket,
     so it's a co-partitioned equi-join, not a cross product."""
-    return _keyed_lane(_bucketed(spark, sf_dir), "lsh_bucket", F.col("bucket"), F.col("bucket"))
+    return _ann_lane(spark, sf_dir, "lsh_bucket")
 
 
 @query(
@@ -210,9 +269,7 @@ def q74_multiprobe_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates are disjoint across probes (no dedup needed) and the
     join stays a co-partitioned equi-join on the bucket key. Probing
     cost is 9/256 of the corpus per query vs. full-scan brute force."""
-    return _keyed_lane(
-        _bucketed(spark, sf_dir), "lsh_multiprobe", F.col("bucket"), F.explode(_probe_array(N_PLANES, 1))
-    )
+    return _ann_lane(spark, sf_dir, "lsh_multiprobe")
 
 
 # --- q120: fuzzy string join (entity resolution) --------------------------
@@ -840,49 +897,21 @@ def q171_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF cell), q77 (two nearest cells) — and reports recall@{TOP_K}
     for each approximate method: 4 rows.
 
-    One pass: the corpus is persisted once with its bucket and its two
-    nearest cells; each corpus row is filed under three blocking keys
-    (``all``/0, bucket, nearest cell) and each query row expands to one
-    probe per (method, key), so ONE candidate join, ONE top-k window
+    One pass over the same ``_ann_rules`` table the lanes read: the
+    corpus is persisted once with its bucket and its ranked cells;
+    each corpus row is filed under three blocking keys (``all``/0,
+    bucket, nearest cell) and each query row expands to one probe per
+    (method, key) (``_ann_search``), so ONE candidate join, ONE top-k window
     and ONE hits join + ``groupBy("method")`` score every method. The
     fixed method list is left-joined: a method with no hits reports 0
     (lsh_bucket at sf0.01/0.1). Recall = hits / n_exact, one exact
     int/int IEEE division per row."""
     from pandamapreduce_spark.caching import scoped_persist
-    from pandamapreduce_spark.operators.ml import nearest_centroids
-    from pandamapreduce_spark.plans.ml import _ivf_seeds
 
     emb = load_table(spark, sf_dir, "embeddings", spread=True).select("vec_id", "embedding")
-    seeds = _ivf_seeds(emb)
-    keyed = scoped_persist(
-        emb.select(
-            "vec_id",
-            "embedding",
-            _bucket_col("embedding").alias("bucket"),
-            nearest_centroids(seeds, 2)["cid"].alias("cells"),
-        )
-    )
-    keys = (("all", F.lit(0)), ("bucket", F.col("bucket")), ("cell", F.col("cells")[0]))
-    corpus = keyed.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.inline(F.array(*[F.struct(F.lit(f).alias("c_family"), k.alias("c_key")) for f, k in keys])),
-    )
-    probes = (
-        ("exact", "all", F.array(F.lit(0))),
-        ("ivf_1probe", "cell", F.slice(F.col("cells"), 1, 1)),
-        ("ivf_2probe", "cell", F.col("cells")),
-        ("lsh_bucket", "bucket", F.array(F.col("bucket"))),
-        ("lsh_multiprobe", "bucket", _probe_array(N_PLANES, 1)),
-    )
-    specs = [F.struct(F.lit(m).alias("method"), F.lit(f).alias("family"), p.alias("probes")) for m, f, p in probes]
-    queries = (
-        keyed.where(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"), F.inline(F.array(*specs)))
-        .select("method", "query_id", "q_emb", "family", F.explode("probes").alias("probe"))
-    )
-    on = (F.col("c_family") == F.col("family")) & (F.col("c_key") == F.col("probe"))
-    top = _ann_topk(corpus, queries, on).select("method", "query_id", "neighbor_id")
+    methods = list(_ann_rules()[1])
+    keyed = scoped_persist(_keyed(emb, methods))
+    top = _ann_search(keyed, methods).select("method", "query_id", "neighbor_id")
     exact = top.where(F.col("method") == "exact").select("query_id", "neighbor_id")
     hits = (
         top.where(F.col("method") != "exact")
@@ -894,11 +923,11 @@ def q171_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_exact"),
         F.count_distinct("query_id").cast("bigint").alias("n_queries"),
     )
-    approx = [F.lit(m) for m, _, _ in probes if m != "exact"]
-    methods = spark.range(1).select(F.explode(F.array(*approx)).alias("method"))
+    approx = [F.lit(m) for m in methods if m != "exact"]
+    listed = spark.range(1).select(F.explode(F.array(*approx)).alias("method"))
     n_hits = F.coalesce(F.col("hits"), F.lit(0)).cast("bigint")
     return (
-        methods.join(hits, "method", "left")
+        listed.join(hits, "method", "left")
         .crossJoin(F.broadcast(base))
         .select(
             "method",

@@ -102,13 +102,13 @@ def test_ivf_probe_ranks_by_assignment_distance(spark, oracle):
     the IVF oracles' ``(x·x - 2 x·c) + c·c`` in DuckDB, bitwise — the
     grouping a reordered sum (``x·c * -2 + c·c + x·x``) breaks."""
     from pandamapreduce_spark.operators.ml import nearest_centroids
-    from pandamapreduce_spark.plans.ml import _ivf_seeds
+    from pandamapreduce_spark.plans.similarity import _ivf_seeds
 
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     seeds = _ivf_seeds(emb)
     rows = (
         assign_clusters(emb, seeds)
-        .select("vec_id", "cluster_id", "dist2", nearest_centroids(seeds, len(seeds)).alias("ranked"))
+        .select("vec_id", "cluster_id", "dist2", nearest_centroids(F.col("embedding"), seeds).alias("ranked"))
         .collect()
     )
     want = {
