@@ -217,9 +217,11 @@ def q58_gmm_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed inputs. The fixture is identified inside the oracle by a
 # decimal-summed fingerprint of the embeddings table; an unknown
 # fixture yields 0 oracle rows → an HONEST mismatch, never a silent
-# pass. Semantic correctness stays guarded by the EM-monotonicity +
-# determinism invariants in tests/test_ml.py; the pin guards
-# regressions and gives the driver a full value-hash row.
+# pass; the query's ``covers`` SQL runs the same fingerprint, so a
+# parity tool can tell an unpinned fixture from a wrong fit. Semantic
+# correctness stays guarded by the EM-monotonicity + determinism
+# invariants in tests/test_ml.py; the pin guards regressions and gives
+# the driver a full value-hash row.
 _Q59_EXPECTED = {
     # fingerprint -> [(component, weight, sigma2, n_assigned, final_mean_loglik)]
     # sf0.001 fixture (500 vectors)
@@ -264,6 +266,7 @@ def _q59_oracle_sql() -> str:
 @query(
     "q59_gmm_em",
     oracle=_q59_oracle_sql(),
+    covers=f"SELECT ({_Q59_FINGERPRINT}) IN ({', '.join(repr(fp) for fp in _Q59_EXPECTED)})",
     doc="Full GMM EM (3 iterations, isotropic): component weights/variances + mean log-likelihood trace. Hash-oracled via per-fixture pinned literal rows (deterministic fit; 6-dp canon), q52-style.",
     tags=("ml", "gmm", "iterative"),
 )

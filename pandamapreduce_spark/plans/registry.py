@@ -37,12 +37,24 @@ class Query:
     #: headline queries run in bench.py at sf0.1
     bench: bool = False
     tags: tuple[str, ...] = field(default=())
+    #: DuckDB SQL over the fixture's views returning one boolean: does
+    #: ``oracle`` hold expected rows for this fixture? Set only for
+    #: oracles that pin literal rows per fixture; ``None`` means the
+    #: oracle is computed and covers every fixture.
+    covers: str | None = None
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def query(name: str, oracle: str | None = None, doc: str = "", bench: bool = False, tags: tuple[str, ...] = ()):
+def query(
+    name: str,
+    oracle: str | None = None,
+    doc: str = "",
+    bench: bool = False,
+    tags: tuple[str, ...] = (),
+    covers: str | None = None,
+):
     """Decorator: register a query builder under ``name``."""
 
     def deco(fn: Builder) -> Builder:
@@ -60,7 +72,9 @@ def query(name: str, oracle: str | None = None, doc: str = "", bench: bool = Fal
             release_caches()
             return fn(spark, sf_dir)
 
-        REGISTRY[name] = Query(name=name, build=build, oracle=oracle, doc=doc or (fn.__doc__ or ""), bench=bench, tags=tags)
+        REGISTRY[name] = Query(
+            name=name, build=build, oracle=oracle, doc=doc or (fn.__doc__ or ""), bench=bench, tags=tags, covers=covers
+        )
         return fn
 
     return deco

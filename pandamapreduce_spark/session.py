@@ -63,6 +63,12 @@ def get_spark(app_name: str = "pandamapreduce_spark", shuffle_partitions: int | 
         ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
         heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(48, max(1, ram_gb // 2))}g")
         builder = builder.master(f"local[{cpus}]").config("spark.driver.memory", heap)
+        # Python workers run under the engine's daemon, which stops each
+        # task from re-reading Spark's own archives (pyworker.py). Local
+        # mode only: the daemon must import the engine, and local workers
+        # start from the driver's cwd and PYTHONPATH, as they already must
+        # to import engine functions pickled by reference.
+        builder = builder.config("spark.python.daemon.module", "pandamapreduce_spark.pyworker")
         # Local mode only: shuffle/spill files on tmpfs so single-node
         # benchmarks measure the engine, not /tmp disk flush stalls. On
         # a real cluster spark.local.dir comes from the deployment

@@ -31,9 +31,10 @@ Prints one JSON line: {"triad_gbps": ..., "steal_frac": ..., "load1": ...}
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # Single-source the measurements: bench.py records the same triad +
 # steal numbers as tera preflight provenance, and the two copies had
 # already diverged once (timed fresh allocation vs warmed out= —

@@ -30,9 +30,10 @@ import time
 
 from pyspark.sql import functions as F
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pandamapreduce_spark.catalog import load_table  # noqa: E402
 from pandamapreduce_spark.functions import cosine  # noqa: E402
 from pandamapreduce_spark.lineage import detach  # noqa: E402

@@ -11,9 +11,10 @@ registered lanes for the verdict-level comparison at the LAST sf_dir.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402

@@ -15,9 +15,10 @@ tests/test_round9.py, so this measures the SHIPPED scheme.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pandamapreduce_spark.plans.similarity import (  # noqa: E402
     SEMDEDUP_PLANES,

@@ -33,16 +33,18 @@ import shutil
 import sys
 import time
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> None:
     scales = [float(a) for a in sys.argv[1:]] or [30.0]
-    local = "/root/repo/.tera-local"
+    local = os.path.join(ROOT, ".tera-local")
     os.makedirs(local, exist_ok=True)
     # Must be set before the JVM launches; get_spark honors a
     # non-empty SPARK_LOCAL_DIRS as authoritative.
     os.environ["SPARK_LOCAL_DIRS"] = local
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from bench import _preflight_steal_gate
     from pandamapreduce_spark.operators import tera
     from pandamapreduce_spark.session import get_spark
@@ -90,8 +92,7 @@ def _record_sidecar(results: list[dict]) -> None:
     disk-backed scaling series stays current round over round (VERDICT
     r7 #7) — prior rounds' series are kept under ``history``; the
     top-level ``runs`` always shows the latest measurement per scale."""
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "docs", "TERA_DISK.json")
+    path = os.path.join(ROOT, "docs", "TERA_DISK.json")
     try:
         with open(path) as fh:
             doc = json.load(fh)

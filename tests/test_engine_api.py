@@ -4,6 +4,8 @@ porting surface (SURVEY §7.1)."""
 from __future__ import annotations
 
 import tempfile
+import uuid
+import zipfile
 
 from pyspark.sql import functions as F
 
@@ -181,6 +183,60 @@ def test_dataset_extension_methods(spark):
     )
     j = ev.salted_join(e.table(SF_DIR, "customer").select(F.col("c_custkey").alias("user_id"), "c_name"), "user_id", n_salts=4)
     assert "c_name" in j.df.columns
+
+
+def test_worker_daemon_fixes_spark_archives(spark):
+    """Warm Python workers run under the engine's daemon, so no importer
+    under an archive that was on the daemon's path at start-up (Spark's
+    pyspark.zip, py4j zip and spark-core jar) keeps ``zipimporter``'s own
+    ``invalidate_caches``, which re-reads the archive on every task."""
+    sc = spark.sparkContext
+    n = 2 * sc.defaultParallelism
+    sc.parallelize(range(n), n).map(lambda x: x + 1).sum()
+
+    def probe(_):
+        import os
+        import sys
+        import zipimport
+
+        # a package the daemon does not import at start-up: its path
+        # inside pyspark.zip gets an importer only now, in a task
+        import pyspark.streaming  # noqa: F401
+
+        archives = [p for p in os.environ["PYTHONPATH"].split(os.pathsep) if p.endswith((".zip", ".jar"))]
+        under = [
+            finder
+            for path, finder in sys.path_importer_cache.items()
+            if any(path == a or path.startswith(a + os.sep) for a in archives)
+        ]
+        yield len(under), sum(type(f).invalidate_caches is zipimport.zipimporter.invalidate_caches for f in under)
+
+    counts = sc.parallelize(range(n), n).mapPartitions(probe).collect()
+    assert all(entries > 0 for entries, _ in counts), counts
+    assert all(rereads == 0 for _, rereads in counts), counts
+
+
+def test_add_py_file_imports_in_warm_workers(spark, tmp_path):
+    """A ``.py`` and a ``.zip`` added after the workers are warm still
+    import in a task: the worker daemon keeps the per-task import-cache
+    invalidation for everything but Spark's own archives."""
+    sc = spark.sparkContext
+    sc.parallelize(range(8), 4).map(lambda x: x + 1).sum()
+    tag = uuid.uuid4().hex[:12]
+    py = tmp_path / f"added_py_{tag}.py"
+    py.write_text("VALUE = 40\n")
+    zp = tmp_path / f"added_zip_{tag}.zip"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr(f"added_zip_{tag}/__init__.py", "VALUE = 2\n")
+    sc.addPyFile(str(py))
+    sc.addPyFile(str(zp))
+
+    def use(_):
+        import importlib
+
+        yield importlib.import_module(f"added_py_{tag}").VALUE + importlib.import_module(f"added_zip_{tag}").VALUE
+
+    assert sc.parallelize(range(4), 4).mapPartitions(use).collect() == [42] * 4
 
 
 def test_driver_contract_shape():

@@ -136,13 +136,20 @@ def test_q59_pinned_oracle_is_honest_on_unknown_fixture():
     """q59's pinned literal-row oracle dispatches on an embeddings
     fingerprint; an UNPINNED fixture must yield 0 oracle rows (a loud
     row-count mismatch), never a silent pass. sf0.1 is deliberately
-    not pinned — verify the dispatch returns nothing there."""
+    not pinned — verify the dispatch returns nothing there, and that
+    the query's ``covers`` SQL says so while it covers the pinned
+    fixtures."""
+    import os
+
     import duckdb
 
     from pandamapreduce_spark.plans import REGISTRY
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM '/root/testdata/sf0.1/embeddings.parquet'"
-    )
-    assert con.execute(REGISTRY["q59_gmm_em"].oracle).fetchall() == []
+    q = REGISTRY["q59_gmm_em"]
+    fixtures = os.path.dirname(SF_DIR)
+    for sf, pinned in (("sf0.001", True), ("sf0.01", True), ("sf0.1", False)):
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{fixtures}/{sf}/embeddings.parquet'")
+        assert con.execute(q.covers).fetchone()[0] is pinned, sf
+        assert (len(con.execute(q.oracle).fetchall()) > 0) is pinned, sf
+        con.close()
